@@ -29,12 +29,6 @@ object LocalSession {
       // iterations — pure compilation churn billed to whichever query runs
       // next. Size it to hold the whole harness's generated classes once.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // probe plumbing: lets a fan-out sweep (SPARK_GRAFT_ONLY=panel_all
-      // at several widths) set the ingest-parallelism override without a
-      // code edit; unset, Runner's session-derived formula applies
-      .config(sys.env.get("SPARK_GRAFT_INGEST_PARALLELISM")
-        .map(v => Map("spark.graft.ingest.parallelism" -> v))
-        .getOrElse(Map.empty[String, String]))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

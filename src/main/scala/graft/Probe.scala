@@ -23,6 +23,24 @@ object Probe {
     else df.withColumn("ts",
       unix_micros(col("ts").cast("timestamp")) * lit(1000L))
 
+  /** Driver-gap attribution for jobs that may overlap (parallel ingest
+    * pools, overlapped funnel chains): `jobs` are (start, duration) in ms,
+    * sorted by start. Returns the length of the union of the job intervals
+    * and, per job, the time since the latest end of any earlier job (0
+    * when another job is still running), so no gap is negative and busy
+    * time never exceeds wall time. */
+  private[graft] def jobGaps(jobs: Seq[(Long, Long)]): (Long, Seq[Long]) = {
+    var busy = 0L
+    var end = Long.MinValue
+    val gaps = jobs.map { case (start, dur) =>
+      val gap = if (end == Long.MinValue) 0L else math.max(0L, start - end)
+      busy += math.max(0L, start + dur - math.max(start, end))
+      end = math.max(end, start + dur)
+      gap
+    }
+    (busy, gaps)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = LocalSession.build(defaultCpus = "32")
 
@@ -34,10 +52,10 @@ object Probe {
       // per-JOB attribution of one declared query (guide §1.1 empirical
       // loop without a UI): a SparkListener records every job's start
       // time, duration and description; the printout shows job count,
-      // summed job time vs wall (the difference is pure driver-side
-      // work), and the driver GAP before each job — how a driver-paced
-      // fit chain (k seeding picks, Lloyd collects, micro-batch setup)
-      // is distinguished from genuinely slow stages.
+      // the union of job intervals vs wall (the difference is pure
+      // driver-side work), and the driver GAP before each job — how a
+      // driver-paced fit chain (k seeding picks, Lloyd collects,
+      // micro-batch setup) is distinguished from genuinely slow stages.
       case "jobs" =>
         val name = args(1)
         val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
@@ -70,14 +88,12 @@ object Probe {
         Thread.sleep(2000) // let the listener bus drain
         spark.sparkContext.removeSparkListener(listener)
         import scala.jdk.CollectionConverters._
-        val rs = recs.asScala.toSeq.sortBy(_._1)
-        val jobSum = rs.map(_._4).sum / 1000.0
+        val rs = recs.asScala.toSeq.sortBy(r => (r._3, r._1))
+        val (busyMs, gaps) = jobGaps(rs.map(r => (r._3, r._4)))
+        val busy = busyMs / 1000.0
         println(f"[jobs] $name%s rows=$n%d wall=$t%.3f s jobs=${rs.size}%d " +
-          f"jobTimeSum=$jobSum%.3f s driverGapSum=${t - jobSum}%.3f s")
-        var prevEnd = 0L
-        rs.foreach { case (id, d, st, ms) =>
-          val gap = if (prevEnd == 0) 0L else st - prevEnd
-          prevEnd = st + ms
+          f"jobBusy=$busy%.3f s driverGapSum=${t - busy}%.3f s")
+        rs.zip(gaps).foreach { case ((id, d, _, ms), gap) =>
           println(f"[jobs]   #$id%4d dur=$ms%6d ms gap=$gap%6d ms  $d%s")
         }
 

@@ -116,9 +116,9 @@ object SmartUpdate {
     * interpolation — field names with quotes/spaces/backticks are safe).
     * `revisionTime` is injected (never utcnow inside the plan) so runs are
     * deterministic and oracle-checkable (SURVEY.md §7.5 risk 3). */
-  def revisionsFromClassified(classified: DataFrame, keyCol: String,
-                              valueFields: Seq[String], dataset: String,
-                              revisionTime: java.sql.Timestamp): DataFrame = {
+  private def revisionsFromClassified(classified: DataFrame, keyCol: String,
+                                      valueFields: Seq[String], dataset: String,
+                                      revisionTime: java.sql.Timestamp): DataFrame = {
     val perField = array(valueFields.map(f => struct(
       lit(f).as("value_field"),
       col(s"${f}_changed").as("changed"),
@@ -144,50 +144,51 @@ object SmartUpdate {
   /** Result counts of a merge, mirroring the reference's return value. */
   case class MergeCounts(newRows: Long, updated: Long, revisions: Long)
 
-  /** Full merge: classify + build the post-merge table + revision log.
-    * Returns (mergedTable, revisions, counts). The merged table is
-    * (existing rows not superseded) ∪ (new) ∪ (updated) — unchanged rows
-    * keep their EXISTING values/rows (never rewritten semantically).
+  /** One classified batch: its counts, its revision rows, the keys it adds
+    * or replaces, and their incoming rows. */
+  final case class Diff(keyCol: String, counts: MergeCounts,
+                        revisions: DataFrame, changedKeys: DataFrame,
+                        fresh: DataFrame) {
+    /** `existing` with every new or updated key taking its incoming row;
+      * unchanged and untouched rows stay as stored. */
+    def applyTo(existing: DataFrame): DataFrame =
+      existing.join(changedKeys, Seq(keyCol), "left_anti")
+        .select(fresh.columns.toSeq.map(col): _*)
+        .unionByName(fresh)
+  }
+
+  /** Classify a deduped batch against the existing rows it can touch and
+    * derive everything a write needs from ONE checkpointed classify pass:
+    * the three counts (a single aggregate action), the revision log, and
+    * the new-or-updated keys with their incoming rows.
     *
-    * One cached classify pass feeds the keys, the revision log, and all
-    * three counts (a single aggregate action); the existing side of the
-    * classify join is range-pruned by the incoming batch. */
-  def merge(incoming0: DataFrame, existing: DataFrame, keyCol: String,
-            valueFields: Seq[String], dataset: String,
-            revisionTime: java.sql.Timestamp)
-      : (DataFrame, DataFrame, MergeCounts) = {
-    val incoming = dedupeLastWins(incoming0, keyCol)
-    val existingPruned = pruneToKeyRange(existing, incoming, keyCol)
-    // localCheckpoint, not cache: the classified rows back an RDD with NO
-    // file source in the plan, so (a) the returned `revs` stays correct
-    // after the caller overwrites the very files `existing` read — a
-    // cached plan would be refreshed/recomputed from the post-merge table
-    // (empty CDC) or chase deleted pre-swap files on eviction — and (b)
-    // nothing is registered with the CacheManager, so per-dataset merges
-    // don't accumulate cache entries the caller can't release (the RDD is
-    // GC'd with the frame). The merge is already eager (counts aggregate
-    // below), so this adds no extra action.
-    val cls = classify(incoming, existingPruned, keyCol, valueFields)
+    * localCheckpoint, not cache: the classified rows back an RDD with NO
+    * file source in the plan, so (a) every frame of the Diff stays correct
+    * after the caller overwrites the very files `existing` read — a cached
+    * plan would be refreshed/recomputed from the post-merge table (empty
+    * CDC) or chase deleted pre-swap files on eviction — and (b) nothing is
+    * registered with the CacheManager, so per-dataset merges don't
+    * accumulate cache entries the caller can't release (the RDD is GC'd
+    * with the frame). The counts aggregate makes the diff eager anyway, so
+    * this adds no extra action.
+    *
+    * PARITY NOTE: an updated key takes the incoming row VERBATIM —
+    * including fields whose incoming value is null/NaN (which changedField
+    * deliberately skips, so they are neither counted nor logged as
+    * revisions). The reference behaves identically: it upserts the FULL
+    * incoming entity for any changed record (azure_data_tracker.py:75-84
+    * copies every field of the row into the entity; batch_upsert merges
+    * every present property), so an incoming NaN rides along whenever any
+    * OTHER field changed. Callers wanting keep-existing-on-missing
+    * semantics should coalesce the incoming frame against the store first;
+    * the engine preserves the reference's contract as-is. */
+  def diff(incoming: DataFrame, existing: DataFrame, keyCol: String,
+           valueFields: Seq[String], dataset: String,
+           revisionTime: java.sql.Timestamp): Diff = {
+    val cls = classify(incoming, existing, keyCol, valueFields)
       .localCheckpoint(true)
-    val newOrUpdatedKeys = cls.filter(col("status").isin("new", "updated"))
+    val changedKeys = cls.filter(col("status").isin("new", "updated"))
       .select(col(keyCol))
-    // unchanged + existing_only + out-of-range rows stay as stored originals
-    val kept = existing.join(newOrUpdatedKeys, Seq(keyCol), "left_anti")
-    // PARITY NOTE: an updated key takes the incoming row VERBATIM —
-    // including fields whose incoming value is null/NaN (which
-    // changedField deliberately skips, so they are neither counted nor
-    // logged as revisions). The reference behaves identically: it upserts
-    // the FULL incoming entity for any changed record
-    // (azure_data_tracker.py:75-84 copies every field of the row into the
-    // entity; batch_upsert merges every present property), so an incoming
-    // NaN rides along whenever any OTHER field changed. Callers wanting
-    // keep-existing-on-missing semantics should coalesce the incoming
-    // frame against the store first; the engine preserves the reference's
-    // contract as-is.
-    val fresh = incoming.join(newOrUpdatedKeys, Seq(keyCol), "left_semi")
-    val merged = kept.select(col(keyCol) +: valueFields.map(col): _*)
-      .unionByName(fresh.select(col(keyCol) +: valueFields.map(col): _*))
-    val revs = revisionsFromClassified(cls, keyCol, valueFields, dataset, revisionTime)
     // one action for all three counts: revisions = total changed flags
     val changedSum = valueFields.map(f =>
       sum(col(s"${f}_changed").cast("long"))).reduceOption(_ + _)
@@ -197,7 +198,25 @@ object SmartUpdate {
       sum(when(col("status") === "updated", 1L).otherwise(0L)).as("u"),
       changedSum.as("r")).head()
     def g(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-    val counts = MergeCounts(g(0), g(1), g(2))
-    (merged, revs, counts)
+    Diff(keyCol, MergeCounts(g(0), g(1), g(2)),
+      revisionsFromClassified(cls, keyCol, valueFields, dataset, revisionTime),
+      changedKeys,
+      incoming.join(changedKeys, Seq(keyCol), "left_semi")
+        .select(col(keyCol) +: valueFields.map(col): _*))
+  }
+
+  /** Full merge: dedupe, classify against the key-range-pruned existing
+    * side, and build the post-merge table + revision log. Returns
+    * (mergedTable, revisions, counts). The merged table is (existing rows
+    * not superseded) ∪ (new) ∪ (updated) — unchanged rows keep their
+    * EXISTING values/rows (never rewritten semantically). */
+  def merge(incoming0: DataFrame, existing: DataFrame, keyCol: String,
+            valueFields: Seq[String], dataset: String,
+            revisionTime: java.sql.Timestamp)
+      : (DataFrame, DataFrame, MergeCounts) = {
+    val incoming = dedupeLastWins(incoming0, keyCol)
+    val d = diff(incoming, pruneToKeyRange(existing, incoming, keyCol),
+      keyCol, valueFields, dataset, revisionTime)
+    (d.applyTo(existing), d.revisions, d.counts)
   }
 }

@@ -1074,7 +1074,17 @@ object Dedup {
     * equi-join (hamming 0), and distinct-print candidates come from the
     * pigeonhole join over the two rep frames. Within-batch duplication
     * composes with the batch operator, the established
-    * dedupAgainstIndex convention. */
+    * dedupAgainstIndex convention.
+    *
+    * `checkpointIndex` contract: the index feeds three plan branches
+    * (identical-print join, rep groupBy, membership fan-out), each of
+    * which evaluates it separately unless it is checkpointed. With the
+    * default `false` the index MUST be a deterministic or persisted scan —
+    * a column-pruned read of the print store, as every incremental and
+    * streaming caller passes. An index derived in-plan from a
+    * nondeterministic or costly source needs `true`: otherwise the three
+    * branches may see different indexes (an inconsistent pair set) and
+    * re-run the derivation three times. */
   def quarterNearDupAgainstIndex(batch: DataFrame, index: DataFrame,
                                  maxHamming: Int = 3,
                                  approxRecall: Boolean = false,

@@ -314,10 +314,10 @@ object KMeans {
     // bit-identical (least chains associate exactly for non-NaN
     // doubles) — with the frame lazily localCheckpointed per round so
     // the pick's TakeOrdered materializes it in the SAME job (no extra
-    // job per round; constant-size plan per round). Residency: the
-    // checkpoint chain holds ≤ k ≤ LargeKSeedThreshold copies of the
-    // (id, v, vn2, d) frame until driver GC — bounded by the small-k
-    // contract of this path (large k dispatches to seedLargeK).
+    // job per round; constant-size plan per round). Residency: at most
+    // two copies of the (id, v, vn2, d) frame — each round releases its
+    // predecessor's checkpoint once its own has materialized, and the
+    // last is released on return.
     // CROSSOVER: below RunningMinSeedThreshold the checkpoint
     // round-trip costs more than the few-literal chained-least plans it
     // replaces (measured: k=8 coarse fits −5-8%, k=16 subspace fits
@@ -336,20 +336,34 @@ object KMeans {
       }
     } else if (k > 1) {
       var cur = v.withColumn("__d", distTo(first)).localCheckpoint(false)
-      while (seeds.size < k) {
+      var prev: Option[DataFrame] = None
+      try while (seeds.size < k) {
         val next = cur
           .select(transform(col("__v"), x => round(x, 6)).as("__c"),
             col("__d"), col("__id"))
           .orderBy(col("__d").desc, col("__id"))
           .limit(1).collect().head.getSeq[Double](0)
+        // the pick materialized cur's checkpoint: its predecessor is no
+        // longer read
+        prev.foreach(releaseCheckpoint)
+        prev = None
         seeds :+= next
-        if (seeds.size < k)
+        if (seeds.size < k) {
+          prev = Some(cur)
           cur = cur.withColumn("__d", least(col("__d"), distTo(next)))
             .localCheckpoint(false)
-      }
+        }
+      } finally { prev.foreach(releaseCheckpoint); releaseCheckpoint(cur) }
     }
     seeds.zipWithIndex.map { case (c, i) => Centroid(i, c, 0L) }.toSeq
   }
+
+  /** Drop a localCheckpoint's blocks from executor storage. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+    }
 
   /** Seeding-scan crossover: at or below this k the farthest-first
     * picks inline the chosen seeds as a chained least() (small plans,

@@ -6,6 +6,7 @@ import graft.store.{SinkTypes, TableStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import scala.util.Try
 
 /** The §3.1 pipeline lifecycle: per-dataset dataflow -> incremental gate ->
   * smart_update merge -> last-run metadata -> run summary.
@@ -32,6 +33,11 @@ object Runner {
     * min(16, _) cap becomes the binding term to revisit. */
   def ingestParallelismFor(defaultParallelism: Int): Int =
     math.min(16, math.max(2, defaultParallelism / 4))
+
+  /** A dataset's merged outcome; its revisions are appended by the run's
+    * commit. */
+  private final case class Merged(result: DatasetResult,
+                                  revisions: Option[DataFrame])
 }
 
 final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp) {
@@ -58,13 +64,6 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
 
   def getLastRun(dataset: String): Option[Timestamp] = metadata.get(dataset)
 
-  def setLastRun(dataset: String, ts: Timestamp): Unit = {
-    val m = metadata + (dataset -> ts)
-    metadataCache = Some(m)
-    store.overwrite(Registry.MetadataTable,
-      m.toSeq.toDF("dataset", "last_run"), maxFiles = 1)
-  }
-
   /** should_update: true iff never run or >= `hours` since last run
     * (azure_connector.py:598-617). */
   def shouldUpdate(dataset: String, hours: Int = 24): Boolean =
@@ -76,45 +75,108 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
 
   // ------------------------------------------------------------------ run
 
-  import Runner.DatasetResult
+  import Runner.{DatasetResult, Merged}
 
-  /** Run one dataset: canonical long frame in, merge + revisions + metadata
-    * out. `canonical` must be (date: 'YYYY-MM-DD' string, <value fields>). */
-  /** Core merge for one dataset: classify + table write, returning the
-    * revision frame for the caller to persist (kept separate so parallel
-    * runs can serialize the shared revisions/metadata writes). */
-  private def mergeCore(tableName: String, canonical0: DataFrame,
-                        valueFields: Seq[String], gateHours: Int)
-      : (DatasetResult, Option[DataFrame]) = {
-    // the merge fires several actions against the incoming frame (classify
-    // aggregate, key joins, the final write) — cache it so the source
-    // pipeline (file read + reshape + sort) runs once, not per action
-    val canonical = canonical0.cache()
-    try {
-      if (canonical.isEmpty)
-        return (DatasetResult(tableName, "no_data", 0, 0, 0), None)
-      if (!shouldUpdate(tableName, gateHours))
-        return (DatasetResult(tableName, "skipped", 0, 0, 0), None)
-      val ts = now()
-      // reads normalize declared decimals to the engine's double surface;
-      // the write casts back to the declared at-rest types — but ONLY for
-      // tables created under the policy (legacy double tables keep their
-      // layout), and incoming values are snapped to the declared scale
-      // first so sink rounding can never churn the tolerance compare
-      val isNew = !store.exists(tableName)
-      val pol = SinkTypes.mergePolicy(
-        store.readOrEmpty(tableName, canonical), tableName, isNew, canonical)
-      val (merged, revs, counts) = SmartUpdate.merge(
-        pol.incoming, pol.existing, "date", valueFields, tableName, ts)
-      store.overwrite(tableName, pol.writeCast(merged),
+  /** Where a table's rows live. A layout decides only which stored rows a
+    * merge reads and how the merged rows are written; everything else is
+    * [[merge]]'s. */
+  private sealed trait Layout {
+    /** The stored rows, at rest, that `incoming` can touch, or None when
+      * `incoming` is empty: the layout's one action over the batch. */
+    def read(table: String, incoming: DataFrame): Option[DataFrame]
+    /** Write the diff's new and updated rows over `pol.existing`, the
+      * [[read]] rows on the engine surface. Called only when the diff
+      * changes something: a re-run with nothing new writes NOTHING. */
+    def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit
+  }
+
+  /** One file per table, rewritten whole: right for the reference's
+    * control-table-sized series. The merge reads the whole table — the
+    * rewrite needs every row anyway. */
+  private object WholeTable extends Layout {
+    def read(table: String, incoming: DataFrame): Option[DataFrame] =
+      if (incoming.isEmpty) None else Some(store.readOrEmpty(table, incoming))
+    def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit =
+      store.overwrite(pol.tableName, pol.writeCast(d.applyTo(pol.existing)),
         maxFiles = 1)
-      // revs is a filter over the merge's checkpointed classify (an
-      // RDD-backed plan): safe to hand out lazily past the overwrite and
-      // the canonical unpersist — no cache or extra action needed
-      val revsOut = if (counts.revisions > 0) Some(revs) else None
-      (DatasetResult(tableName, "success", counts.newRows, counts.updated,
-        counts.revisions), revsOut)
+  }
+
+  /** `table/__year=YYYY/`: a merge reads only the years the batch touches
+    * (directory pruning) and rewrites only the years that gained or
+    * changed a row (dynamic partition overwrite), so its cost is
+    * O(touched partitions), not O(table). */
+  private object YearPartitioned extends Layout {
+    private val year = substring(col("date"), 1, 4).cast("int")
+    private def years(df: DataFrame) =
+      df.select(year).distinct().collect().map(_.getInt(0)).toSeq
+    def read(table: String, incoming: DataFrame): Option[DataFrame] =
+      Some(years(incoming)).filter(_.nonEmpty).map(ys =>
+        store.readOrEmpty(table, incoming.withColumn("__year", year))
+          .filter(col("__year").isin(ys: _*)))
+    def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit = {
+      val kept = pol.existing.filter(col("__year").isin(years(d.changedKeys): _*))
+      store.overwritePartitions(pol.tableName,
+        pol.writeCast(d.applyTo(kept).withColumn("__year", year)), Seq("__year"))
+    }
+  }
+
+  private def failed(tableName: String) =
+    Merged(DatasetResult(tableName, "error", 0, 0, 0), None)
+
+  /** The one merge of one dataset, for every caller and layout: dedupe and
+    * cache the incoming frame, no_data on empty input, the 24 h gate, the
+    * declared-type policy, the smart_update diff and the table write. A
+    * failure comes back as the Try's failure, never half-applied: the
+    * table write is the last step and is atomic.
+    *
+    * The incoming frame is cached because the merge fires several actions
+    * against it (the layout's read, classify, the write's fresh rows) —
+    * the source pipeline (file read + reshape + sort) then runs once, and
+    * the dedupe shuffle with it. The revisions are a filter over the
+    * diff's checkpoint (an RDD-backed plan): safe to hand out lazily past
+    * the write and the unpersist. */
+  private def merge(tableName: String, canonical0: DataFrame,
+                    valueFields: Seq[String], gateHours: Int,
+                    layout: Layout): Try[Merged] = Try {
+    val canonical = SmartUpdate.dedupeLastWins(canonical0, "date").cache()
+    try layout.read(tableName, canonical) match {
+      case None => Merged(DatasetResult(tableName, "no_data", 0, 0, 0), None)
+      case Some(_) if !shouldUpdate(tableName, gateHours) =>
+        Merged(DatasetResult(tableName, "skipped", 0, 0, 0), None)
+      case Some(touched) =>
+        // reads normalize declared decimals to the engine's double surface;
+        // the write casts back to the declared at-rest types — but ONLY for
+        // tables created under the policy (legacy double tables keep their
+        // layout), and incoming values are snapped to the declared scale
+        // first so sink rounding can never churn the tolerance compare
+        val pol = SinkTypes.mergePolicy(touched, tableName,
+          !store.exists(tableName), canonical)
+        val d = SmartUpdate.diff(pol.incoming, pol.existing, "date",
+          valueFields, tableName, now())
+        val c = d.counts
+        if (c.newRows > 0 || c.updated > 0) layout.write(d, pol)
+        Merged(DatasetResult(tableName, "success", c.newRows, c.updated,
+          c.revisions), if (c.revisions > 0) Some(d.revisions) else None)
     } finally canonical.unpersist()
+  }
+
+  /** The shared writes of a run, applied once and serially: ONE revisions
+    * append for every merged dataset and ONE metadata write recording
+    * each success's last_run (scrapermetadata, azure_connector.py:563-571). */
+  private def commit(merged: Seq[Merged]): Seq[DatasetResult] = {
+    val revs = merged.flatMap(_.revisions)
+    if (revs.nonEmpty)
+      store.append(Registry.RevisionsTable, revs.reduce(_.unionByName(_)),
+        maxFiles = 1)
+    val successes = merged.map(_.result).filter(_.status == "success")
+    if (successes.nonEmpty) {
+      val ts = now()
+      val m = metadata ++ successes.map(_.dataset -> ts)
+      metadataCache = Some(m)
+      store.overwrite(Registry.MetadataTable,
+        m.toSeq.toDF("dataset", "last_run"), maxFiles = 1)
+    }
+    merged.map(_.result)
   }
 
   /** The per-dataset fetch-failure contract (main_azure.py:136-152 +
@@ -122,30 +184,26 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     * canonical frame; a failed fetch (None) records status "error" for
     * THIS dataset and the run continues — callers loop over datasets and
     * summarize() reports the mixed statuses, exactly the reference's
-    * behavior when one source site is down. */
+    * behavior when one source site is down. A site that is "up" but broken
+    * (HTTP 200 with an HTML error page where workbook bytes belong) fails
+    * in parse() or in the merge, not in fetch — that too is THIS dataset's
+    * error, never the run's (main_azure.py wraps each dataset in try/log). */
   def runFetched(tableName: String, fetched: Option[Array[Byte]],
                  parse: Array[Byte] => DataFrame, valueFields: Seq[String],
                  gateHours: Int = 24): DatasetResult =
-    fetched match {
-      case None => DatasetResult(tableName, "error", 0, 0, 0)
-      case Some(bytes) =>
-        // a site that is "up" but broken (HTTP 200 with an HTML error
-        // page where workbook bytes belong) fails in parse() or in the
-        // merge actions, not in fetch — that too is THIS dataset's error,
-        // never the run's (main_azure.py wraps each dataset in try/log)
-        try runDataset(tableName, parse(bytes), valueFields, gateHours)
-        catch { case scala.util.control.NonFatal(_) =>
-          DatasetResult(tableName, "error", 0, 0, 0)
-        }
-    }
+    commit(Seq(fetched.fold(failed(tableName)) { bytes =>
+      Try(parse(bytes))
+        .flatMap(merge(tableName, _, valueFields, gateHours, WholeTable))
+        .getOrElse(failed(tableName))
+    })).head
 
+  /** Run one dataset: canonical long frame (date: 'YYYY-MM-DD' string,
+    * <value fields>) in, merge + revisions + metadata out. A failing merge
+    * throws. */
   def runDataset(tableName: String, canonical0: DataFrame,
-                 valueFields: Seq[String], gateHours: Int = 24): DatasetResult = {
-    val (result, revs) = mergeCore(tableName, canonical0, valueFields, gateHours)
-    revs.foreach(r => store.append(Registry.RevisionsTable, r, maxFiles = 1))
-    if (result.status == "success") setLastRun(tableName, now())
-    result
-  }
+                 valueFields: Seq[String], gateHours: Int = 24): DatasetResult =
+    commit(Seq(merge(tableName, canonical0, valueFields, gateHours,
+      WholeTable).get)).head
 
   /** Ingest fan-out sized to the session instead of a hard-coded literal.
     * Each dataset's merge is driver-side parse plus a handful of small
@@ -165,150 +223,47 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     * statistically indistinguishable (mins 5.7-6.6 vs 5.4-6.1s, medians
     * overlapping across sessions) — the response surface is FLAT from 8
     * to 16 and falls off below. dp/4 picks the flat region's low end,
-    * which also minimizes commit-lock/scheduler contention; deployments
-    * where executor-side parse (the V2 edb-grid source) moves the
-    * bottleneck can raise `spark.graft.ingest.parallelism` toward the
-    * cap instead of editing the formula. */
+    * which also minimizes commit-lock/scheduler contention. */
   def defaultIngestParallelism: Int =
-    spark.conf.getOption("spark.graft.ingest.parallelism").map { v =>
-      // validated loudly and verbatim (it may deliberately exceed the
-      // formula's cap — that is what the override is FOR); only a value
-      // that would break the pool (<=0, non-numeric) is a config error
-      val p = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.ingest.parallelism must be a positive integer, got '$v'")
-      }
-      require(p > 0,
-        s"spark.graft.ingest.parallelism must be positive, got $p")
-      p
-    }.getOrElse(
-      Runner.ingestParallelismFor(spark.sparkContext.defaultParallelism))
+    Runner.ingestParallelismFor(spark.sparkContext.defaultParallelism)
 
   /** §7.6(a): per-dataset PARALLEL execution — the reference's sequential
     * 26-dataset loop (main_azure.py:136-152) becomes a pool of concurrent
     * Spark jobs (the scheduler interleaves them across executor threads).
     * Per-dataset table writes target distinct directories and are safe
     * concurrently; the SHARED writes — datarevisions append, metadata —
-    * are collected and applied once, serially, at the end. The pool is
-    * never wider than the dataset list; `parallelism` defaults to the
-    * session-derived fan-out above. */
+    * are applied once, serially, at the end. A dataset whose merge fails
+    * records status "error" and the rest of the run — its siblings'
+    * revisions and last_run included — still commits. The pool is
+    * [[defaultIngestParallelism]] wide, never wider than the dataset
+    * list. */
   def runAllParallel(datasets: Seq[(String, DataFrame, Seq[String])],
-                     gateHours: Int = 24,
-                     parallelism: Int = defaultIngestParallelism): Seq[DatasetResult] = {
+                     gateHours: Int = 24): Seq[DatasetResult] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, math.max(1, datasets.size)))
+      math.min(defaultIngestParallelism, math.max(1, datasets.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val futures = datasets.map { case (table, df, vf) =>
-        Future(mergeCore(table, df, vf, gateHours))
+        Future(merge(table, df, vf, gateHours, WholeTable)
+          .getOrElse(failed(table)))
       }
-      val outcomes = Await.result(Future.sequence(futures), Duration.Inf)
-      val allRevs = outcomes.flatMap(_._2)
-      if (allRevs.nonEmpty)
-        store.append(Registry.RevisionsTable,
-          allRevs.reduce(_.unionByName(_)), maxFiles = 1)
-      val ts = now()
-      // ONE metadata write for the whole run: per-dataset setLastRun would
-      // overwrite-and-swap the (tiny) table once per success — 26 write
-      // jobs where one carries the same information
-      val successes = outcomes.collect {
-        case (r, _) if r.status == "success" => r.dataset
-      }
-      if (successes.nonEmpty) {
-        val m = metadata ++ successes.map(_ -> ts)
-        metadataCache = Some(m)
-        store.overwrite(Registry.MetadataTable,
-          m.toSeq.toDF("dataset", "last_run"), maxFiles = 1)
-      }
-      outcomes.map(_._1)
+      commit(Await.result(Future.sequence(futures), Duration.Inf))
     } finally pool.shutdown()
   }
 
-  /** Scale path: the same merge with a YEAR-partitioned table layout and
-    * partition-scoped writes. The existing side is read with a partition
-    * filter on the years the incoming batch touches (directory pruning —
-    * untouched years are never read), and the write replaces only those
-    * year partitions (dynamic partition overwrite — untouched years are
-    * never written). Fixes the full-rewrite scale limit for good: cost per
-    * merge is O(touched partitions), not O(table).
-    *
-    * Semantics are identical to runDataset (same classify/revisions); rows
-    * in untouched years are existing_only by construction. */
+  /** Scale path: the same merge with a YEAR-partitioned table layout — the
+    * existing side is read with a partition filter on the years the
+    * incoming batch touches, and the write replaces only the years that
+    * gained or changed a row. Semantics are identical to runDataset (same
+    * classify/revisions); rows in untouched years are existing_only by
+    * construction. A failing merge throws. */
   def runDatasetPartitioned(tableName: String, canonical0: DataFrame,
                             valueFields: Seq[String],
-                            gateHours: Int = 24): DatasetResult = {
-    val canonical = SmartUpdate.dedupeLastWins(canonical0, "date")
-      .withColumn("__year", substring(col("date"), 1, 4).cast("int"))
-      .cache()
-    try {
-      if (canonical.isEmpty)
-        return DatasetResult(tableName, "no_data", 0, 0, 0)
-      if (!shouldUpdate(tableName, gateHours))
-        return DatasetResult(tableName, "skipped", 0, 0, 0)
-      val ts = now()
-      val years = canonical.select("__year").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // same declared-type policy as mergeCore: legacy double tables keep
-      // their layout (a partition-scoped write must NEVER mix double and
-      // decimal physical types across one table's partitions — the table
-      // would become unreadable); declared tables snap incoming values to
-      // the declared scale before classify so rounding can't churn
-      val isNew = !store.exists(tableName)
-      val pol = SinkTypes.mergePolicy(
-        if (!isNew)
-          store.read(tableName).filter(col("__year").isin(years: _*))
-        else canonical.limit(0),
-        tableName, isNew, canonical)
-      val existingTouched = pol.existing
-      val canonV = pol.incoming
-      // localCheckpoint, not cache (same reasoning as SmartUpdate.merge):
-      // the classify result must survive the partition overwrite below —
-      // a cached plan still references the table files and gets refreshed
-      // from the POST-merge data (CacheManager.recacheByPath), which would
-      // empty the CDC log; an RDD-backed checkpoint has no file source.
-      val cls = SmartUpdate.classify(canonV.drop("__year"),
-        existingTouched.drop("__year"), "date", valueFields)
-        .localCheckpoint(true)
-      val changedSum = valueFields.map(f =>
-        sum(col(s"${f}_changed").cast("long"))).reduce(_ + _)
-      val cRow = cls.agg(
-        sum(when(col("status") === "new", 1L).otherwise(0L)),
-        sum(when(col("status") === "updated", 1L).otherwise(0L)),
-        changedSum).head()
-      def g(i: Int) = if (cRow.isNullAt(i)) 0L else cRow.getLong(i)
-      val counts = SmartUpdate.MergeCounts(g(0), g(1), g(2))
-      if (counts.newRows > 0 || counts.updated > 0) {
-        // partitions to rewrite = years that actually gained or changed a
-        // row; a full re-download with nothing new writes NOTHING (the
-        // reference's daily no-op run costs a classify, not a rewrite).
-        // A cheap filter over the checkpointed cls — reused thrice (years
-        // collect + two key joins) without needing its own cache entry.
-        val newOrUpdatedKeys = cls
-          .filter(col("status").isin("new", "updated")).select(col("date"))
-          .withColumn("__year", substring(col("date"), 1, 4).cast("int"))
-        val changedYears = newOrUpdatedKeys.select("__year").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val keptChanged = existingTouched
-          .filter(col("__year").isin(changedYears: _*))
-          .join(newOrUpdatedKeys.select("date"), Seq("date"), "left_anti")
-        val fresh = canonV
-          .join(newOrUpdatedKeys.select("date"), Seq("date"), "left_semi")
-        val cols = (Seq("date") ++ valueFields ++ Seq("__year")).map(col)
-        val out = keptChanged.select(cols: _*).unionByName(fresh.select(cols: _*))
-        store.overwritePartitions(tableName,
-          pol.writeCast(out), Seq("__year"))
-      }
-      if (counts.revisions > 0)
-        store.append(Registry.RevisionsTable,
-          SmartUpdate.revisionsFromClassified(
-            cls, "date", valueFields, tableName, ts), maxFiles = 1)
-      setLastRun(tableName, ts)
-      DatasetResult(tableName, "success", counts.newRows, counts.updated,
-        counts.revisions)
-    } finally canonical.unpersist()
-  }
+                            gateHours: Int = 24): DatasetResult =
+    commit(Seq(merge(tableName, canonical0, valueFields, gateHours,
+      YearPartitioned).get)).head
 
   /** Fold per-dataset results into the run summary (main_azure.py:267-309)
     * and persist it (S11 — a table here; JSON via df.write.json if a blob

@@ -129,10 +129,9 @@ object SinkTypes {
     true
   }
 
-  /** The one merge-time policy bundle, shared by every merge path
-    * (Runner.mergeCore, Runner.runDatasetPartitioned,
-    * StreamIngest.ingest) so batch and streaming can never diverge on
-    * at-rest schema: decide whether this table carries declared types,
+  /** The merge-time policy bundle, applied by the one merge every ingest
+    * path runs (`Runner`'s private merge — batch, parallel, partitioned and
+    * streaming alike): decide whether this table carries declared types,
     * normalize the existing side to the engine's double surface, and snap
     * the incoming batch to the declared scale when the contract applies. */
   final case class MergePolicy(tableName: String, declared: Boolean,

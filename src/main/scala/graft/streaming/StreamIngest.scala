@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.config.Registry
-import graft.merge.SmartUpdate
+import graft.pipeline.Runner
 import graft.store.TableStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,8 +16,8 @@ import java.sql.Timestamp
   * maps that contract onto Structured Streaming without inventing new
   * semantics:
   *
-  *   - `ingest`: readStream -> foreachBatch -> the SAME smart_update merge
-  *     the batch path uses (Trigger.AvailableNow for catch-up runs). Each
+  *   - `ingest`: readStream -> foreachBatch -> the batch Runner's own
+  *     smart_update merge (Trigger.AvailableNow for catch-up runs). Each
   *     micro-batch is a keyed diff-merge with CDC revisions — streaming
   *     upsert with an audit trail, checkpointed for exactly-once effect on
   *     the keyed store.
@@ -32,67 +32,40 @@ object StreamIngest {
   /** One observation of a series, as it arrives on the wire. */
   final case class Obs(date: String, value: Double)
 
-  /** Stream ingest into the keyed store: every micro-batch runs the exact
-    * batch smart_update (full parity — tolerance, NaN skip, last-wins,
-    * revision fan-out), so a restart replays from the checkpoint into an
-    * idempotent keyed merge.
+  /** Stream ingest into the keyed store: every micro-batch is one
+    * `Runner.runDataset` call — the batch pipeline's own smart_update merge
+    * (tolerance, NaN skip, last-wins, revision fan-out, declared-type
+    * policy, last_run), so batch and streaming cannot diverge — and a
+    * restart replays from the checkpoint into an idempotent keyed merge.
+    * gateHours=0 because micro-batch cadence IS the gate; a failing
+    * micro-batch fails the query rather than being skipped.
     *
     * This variant rewrites the WHOLE table per batch (read-merge-swap,
     * one output file) — right for the reference's tiny control-table-sized
     * series (26 series x <=1000 rows, where one file per table IS the
     * correct layout), wrong for a large keyed store: use
-    * [[ingestPartitioned]] there, which reads and rewrites only the year
-    * partitions a micro-batch touches. `compactRevisionsOver` (opt-in,
-    * 0 = off) compacts the revision log in-stream once it exceeds that
-    * many files — see [[ingestPartitioned]] for the cadence contract. */
+    * [[ingestPartitioned]] there. `compactRevisionsOver` (opt-in, 0 = off)
+    * compacts the revision log in-stream once it exceeds that many files
+    * — see [[ingestPartitioned]] for the cadence contract. */
   def ingest(obs: DataFrame, store: TableStore, table: String,
              valueField: String, checkpointDir: String,
              now: () => Timestamp,
              trigger: Trigger = Trigger.AvailableNow(),
-             compactRevisionsOver: Int = 0): StreamingQuery = {
-    // Trigger.AvailableNow = the catch-up/cron shape (drain the backlog,
-    // stop); pass ProcessingTime for a long-lived continuous ingest
-    obs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val canonical = batch.select(
-          col("date").cast("string").as("date"),
-          col("value").cast("double").as(valueField))
-        if (!canonical.isEmpty) {
-          // same declared-type discipline as Runner.mergeCore — a stream
-          // micro-batch must not flip a declared-decimal table's at-rest
-          // schema back to double (nor touch a legacy double table's)
-          val isNew = !store.exists(table)
-          val pol = graft.store.SinkTypes.mergePolicy(
-            store.readOrEmpty(table, canonical), table, isNew, canonical)
-          val (merged, revs, counts) = SmartUpdate.merge(
-            pol.incoming, pol.existing, "date", Seq(valueField), table, now())
-          store.overwrite(table, pol.writeCast(merged), maxFiles = 1)
-          if (counts.revisions > 0) {
-            store.append(Registry.RevisionsTable, revs, maxFiles = 1)
-            if (compactRevisionsOver > 0)
-              store.compactIfOver(Registry.RevisionsTable, compactRevisionsOver)
-          }
-        }
-        ()
-      }
-      .start()
-  }
+             compactRevisionsOver: Int = 0): StreamingQuery =
+    mergeStream(obs, store, valueField, checkpointDir, now, trigger,
+        compactRevisionsOver) {
+      _.runDataset(table, _, Seq(valueField), gateHours = 0)
+    }
 
-  /** Stream ingest at the large-table layout: every micro-batch runs the
-    * SAME partitioned merge the batch scale path uses
-    * (`Runner.runDatasetPartitioned` -> `TableStore.overwritePartitions`) —
-    * the existing side is read with a partition filter on the years the
-    * batch touches (directory pruning: untouched years are never read),
-    * and only year partitions that actually gained or changed a row are
-    * rewritten via dynamic partition overwrite. A micro-batch touching one
-    * year reads one year and writes one year: per-batch cost is O(touched
-    * partitions), not O(table) — the property that keeps a long-lived
-    * stream over a 100 TB keyed store runnable. Merge semantics are
-    * identical to `ingest` (tolerance, NaN skip, last-wins, CDC revisions
-    * appended); gateHours=0 because micro-batch cadence IS the gate.
+  /** Stream ingest at the large-table layout: every micro-batch is one
+    * `Runner.runDatasetPartitioned` call — the existing side is read with
+    * a partition filter on the years the batch touches (directory
+    * pruning: untouched years are never read), and only year partitions
+    * that actually gained or changed a row are rewritten via dynamic
+    * partition overwrite. A micro-batch touching one year reads one year
+    * and writes one year: per-batch cost is O(touched partitions), not
+    * O(table) — the property that keeps a long-lived stream over a 100 TB
+    * keyed store runnable. Merge semantics are identical to `ingest`.
     *
     * Delivery semantics: the KEYED TABLE is exactly-once under replay —
     * the merge is idempotent, so a batch re-run after a crash converges to
@@ -110,31 +83,43 @@ object StreamIngest {
     * threshold (one directory listing per revising batch; non-revising
     * batches pay nothing — atomic, and compact() merges any append racing
     * it, so readers never observe a partial log and appends are never
-    * lost). Deployments that
-    * prefer an external cadence leave it 0 and run
+    * lost). Deployments that prefer an external cadence leave it 0 and run
     * `TableStore.compact(revisionsTable)` on their own schedule. */
   def ingestPartitioned(obs: DataFrame, store: TableStore, table: String,
                         valueField: String, checkpointDir: String,
                         now: () => Timestamp,
                         trigger: Trigger = Trigger.AvailableNow(),
-                        compactRevisionsOver: Int = 0): StreamingQuery = {
+                        compactRevisionsOver: Int = 0): StreamingQuery =
+    mergeStream(obs, store, valueField, checkpointDir, now, trigger,
+        compactRevisionsOver) {
+      _.runDatasetPartitioned(table, _, Seq(valueField), gateHours = 0)
+    }
+
+  /** The foreachBatch body both ingest layouts share: `merge` one
+    * micro-batch, as the canonical (date, valueField) frame, through the
+    * query's Runner, then the revision-log cadence. */
+  private def mergeStream(obs: DataFrame, store: TableStore,
+                          valueField: String, checkpointDir: String,
+                          now: () => Timestamp,
+                          trigger: Trigger, compactRevisionsOver: Int)(
+      merge: (Runner, DataFrame) => Runner.DatasetResult): StreamingQuery = {
     // one Runner for the query's lifetime: its write-through metadata cache
     // stays coherent across micro-batches (one tiny table read at start,
     // not one per batch)
-    val runner = new graft.pipeline.Runner(obs.sparkSession, store, now)
+    val runner = new Runner(obs.sparkSession, store, now)
+    // Trigger.AvailableNow = the catch-up/cron shape (drain the backlog,
+    // stop); pass ProcessingTime for a long-lived continuous ingest
     obs.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val canonical = batch.select(
+        val result = merge(runner, batch.select(
           col("date").cast("string").as("date"),
-          col("value").cast("double").as(valueField))
-        val result = runner.runDatasetPartitioned(table, canonical,
-          Seq(valueField), gateHours = 0)
-        // gate on the batch's own revision count, like ingest(): a
-        // non-revising micro-batch pays neither the cadence listing nor
-        // the revision log's recovery probe
+          col("value").cast("double").as(valueField)))
+        // gate on the batch's own revision count: a non-revising
+        // micro-batch pays neither the cadence listing nor the revision
+        // log's recovery probe
         if (compactRevisionsOver > 0 && result.revisions > 0)
           store.compactIfOver(Registry.RevisionsTable, compactRevisionsOver)
         ()

@@ -993,6 +993,17 @@ class DedupSimilaritySpec extends SparkSuite {
     assert(degraded.map(_.nMembers).sum == 3)
   }
 
+  test("running-min k-means seeding releases every checkpoint it creates") {
+    import graft.ops.KMeans
+    val rows = (0 until 120).map(i => i.toLong ->
+      Array.tabulate(4)(d => math.sin(i * 7.0 + d * 3.0))).toDF("id", "vec")
+    val k = 20 // the running-min regime: (RunningMinSeedThreshold, LargeKSeedThreshold]
+    assert(k > KMeans.RunningMinSeedThreshold && k <= KMeans.LargeKSeedThreshold)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    assert(KMeans.seedCentroids(rows, "id", "vec", k).size == k)
+    assert(spark.sparkContext.getPersistentRDDs.size <= before)
+  }
+
   test("bloom decontamination: no false negatives; superset of exact flags") {
     import graft.ops.Dedup
     val bench = Seq(1L -> "the quick brown fox jumps over the lazy dog")

@@ -314,6 +314,40 @@ class RunnerSpec extends SparkSuite {
       Set(cfg.tableName, gasCfg.tableName))
   }
 
+  test("parallel runner: a failing dataset records error; the others' revisions and last_run commit") {
+    val (store, runner, setNow) = newEnv()
+    val (canon, snake) = canonical()
+    runner.runDataset(cfg.tableName, canon, Seq(snake))
+    setNow("2025-06-03 00:00:00")
+    val revised = canon.withColumn(snake,
+      when(col("date") === "2015-07-01", col(snake) + 5).otherwise(col(snake)))
+    val gasCfg = Registry.edbConfigs.find(_.name == "gas_price").get
+    val gasGrid = GridSource.readGrid(spark, "fixtures/edb_gas_price.csv", gasCfg.dataLocation)
+    val (gasCanon, gasSnake) = GridSource.canonicalize(
+      GridSource.processMonthly(gasGrid, gasCfg), gasCfg)
+    // a frame that throws when evaluated: one bad row, as a broken source gives
+    val thrower = gasCanon.withColumn(gasSnake,
+      when(col("date") === "2015-08-01", raise_error(lit("bad cell")))
+        .otherwise(col(gasSnake)))
+    val results = runner.runAllParallel(Seq(
+      (cfg.tableName, revised, Seq(snake)),
+      (gasCfg.tableName, thrower, Seq(gasSnake)))).map(r => r.dataset -> r).toMap
+    assert(results(gasCfg.tableName).status == "error")
+    assert(results(cfg.tableName).status == "success" &&
+      results(cfg.tableName).revisions == 1)
+    // the revised dataset's table, revision row and last_run all landed
+    assert(store.read(cfg.tableName).filter(col("date") === "2015-07-01")
+      .collect().head.getAs[Double](snake) == 7892.0)
+    val revs = store.read(Registry.RevisionsTable).collect()
+    assert(revs.map(r => (r.getAs[String]("dataset"), r.getAs[String]("data_date"),
+      r.getAs[Double]("old_value"), r.getAs[Double]("new_value"))).toSeq ==
+      Seq((cfg.tableName, "2015-07-01", 7887.0, 7892.0)))
+    val reread = new Runner(spark, store, () => Timestamp.valueOf("2025-06-03 00:00:00"))
+    assert(reread.getLastRun(cfg.tableName).contains(Timestamp.valueOf("2025-06-03 00:00:00")))
+    assert(reread.getLastRun(gasCfg.tableName).isEmpty)
+    assert(!store.exists(gasCfg.tableName))
+  }
+
   test("ingest fan-out derives from the session, bounded [2,16]") {
     // pin CONCRETE values at the load-bearing widths, not the formula
     // re-evaluated against itself: 32 (the production local[32] session —
@@ -330,16 +364,6 @@ class RunnerSpec extends SparkSuite {
     assert(runner.defaultIngestParallelism ==
       graft.pipeline.Runner.ingestParallelismFor(
         spark.sparkContext.defaultParallelism))
-    // the conf override wins verbatim (may exceed the formula's cap);
-    // non-positive and non-numeric values fail loudly, never reach the pool
-    try {
-      spark.conf.set("spark.graft.ingest.parallelism", "24")
-      assert(runner.defaultIngestParallelism == 24)
-      spark.conf.set("spark.graft.ingest.parallelism", "0")
-      intercept[IllegalArgumentException](runner.defaultIngestParallelism)
-      spark.conf.set("spark.graft.ingest.parallelism", "eight")
-      intercept[IllegalArgumentException](runner.defaultIngestParallelism)
-    } finally spark.conf.unset("spark.graft.ingest.parallelism")
   }
 
   test("run summary persists one row per dataset") {
