@@ -172,8 +172,6 @@ object SparkEntry {
         val autoR = autoDs.map { case (t, df, vf) =>
           runner.runDatasetPartitioned(t, df, vf)
         }
-        // fan-out defaults to the session-derived value; the pool is
-        // already capped at the 5-dataset list size
         val restR = runner.runAllParallel(rest)
         (autoR ++ restR).map(r =>
           (r.dataset, phase, r.status, r.newRows, r.updated, r.revisions))
@@ -714,25 +712,12 @@ object SparkEntry {
         val store = new TableStore(s, dir)
         val runner = new Runner(s, store,
           () => java.sql.Timestamp.valueOf("2025-06-01 00:00:00"))
-        // dataset CONSTRUCTION is parallelized like the ingest below
-        // (guide §2.6 overlap independent work): each arm does real
-        // driver/engine work before any merge runs — the 15 EDB
-        // workbooks parse on the driver (XLS/XLSX byte readers) and
-        // each FRED read.json runs a schema-inference job — and the 26
-        // are independent, so a sequential map serialized ~26 parse +
-        // inference steps that overlap cleanly (measured as the first
-        // ~4 s of tiny jobs in the `Probe jobs panel_all` profile).
-        // Future.sequence preserves list order, so downstream ordering
-        // (and the oracle) is untouched.
-        val datasets = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            Runner.ingestParallelismFor(s.sparkContext.defaultParallelism))
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          try Await.result(Future.sequence(Registry.allConfigs.map { cfg =>
-            Future {
+        // dataset construction overlaps like the ingest below: the 26
+        // are independent, and each does real work before any merge runs
+        // (a driver-side workbook parse, or a FRED schema-inference job)
+        val datasets = Overlap(s, runner.defaultIngestParallelism)(
+          Registry.allConfigs.map { cfg =>
+            s"read: ${cfg.tableName}" -> { () =>
               val path = s"$fx/${files(cfg.name)}"
               cfg.kind match {
                 case Registry.Fred =>
@@ -750,12 +735,7 @@ object SparkEntry {
                   (cfg.tableName, canon, Seq(snake))
               }
             }
-          }), Duration.Inf)
-          finally pool.shutdown()
-        }
-        // fan-out derives from the session (Runner.defaultIngestParallelism:
-        // defaultParallelism/4 = 8 on local[32], the round-10 measured
-        // optimum) instead of a hard-coded literal
+          })
         runner.runAllParallel(datasets)
         new EngineApi(s, store).panelFull()
           .filter(col("date").between("2020-01-01", "2024-12-31"))
@@ -3145,17 +3125,6 @@ object SparkEntry {
     })
   )
 
-  /** Runs `f` with the thread-local job description set to `label`,
-    * restoring the caller's (e.g. the bench's) afterwards — guide §1.5:
-    * stage labels make the funnel's construct-phase jobs attributable
-    * in `Probe jobs` / event logs. No timing effect. */
-  private def labeled[A](s: SparkSession, label: String)(f: => A): A = {
-    val sc = s.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try f finally sc.setJobDescription(prev)
-  }
-
   /** The curate_corpus_v2 funnel up to (and excluding) the JSONL
     * delivery — the frame the query writes and PlanSpec audits (never
     * cartesian; the corpus `text` column crosses at most one exchange). */
@@ -3208,16 +3177,9 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       // The two eager construct chains are INDEPENDENT — the Bloom
       // bitmap + g3 survivor spine read documents, the k=8 quantizer
-      // fit reads embeddings — so they run as two overlapped driver
-      // threads (guide §2.6: actions are only sequential because the
-      // driver calls them sequentially; the fit's driver-paced seeding
-      // picks back-fill the cores the g3 jobs leave idle). Job labels
-      // make the stages attributable in `Probe jobs` / event logs.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val g3F = Future(labeled(s, "funnelv2: bloom + g3 spine") {
+      // fit reads embeddings — so they overlap: the fit's driver-paced
+      // seeding picks back-fill the cores the g3 jobs leave idle.
+      val (g3, cents) = Overlap.both(s)("funnelv2: bloom + g3 spine" -> { () =>
         val bitmap = Dedup.bloomBuildAuto(
           docs.filter(col("doc_id") % 50 === 0), "text",
           shingleWords = 3, k = 3)
@@ -3256,21 +3218,17 @@ object SparkEntry {
         spine.join(repOk, "doc_id").join(bloomOk, "doc_id")
           .join(ndDrop, Seq("doc_id"), "left_anti")
           .localCheckpoint()
-      })
+      },
       // stage 6 quantizer: SemDeDup through the trained k=8 coarse
       // quantizer. Drop-set semantics, NOT keep-set: a doc with no
       // embedding row cannot be judged semantically and passes through
       // (only a proven within-cluster near-dup drops) — the sf0.1
       // testdata exercises exactly this, covering only 2 of 5 docs with
       // embeddings.
-      val centsF = Future(labeled(s, "funnelv2: kmeans fit") {
-        KMeans.fit(emb, "vec_id", "embedding", k = 8, iters = 2)
-      })
-      val (g3, cents) =
-        try (Await.result(g3F, Duration.Inf), Await.result(centsF, Duration.Inf))
-        finally pool.shutdown()
+      "funnelv2: kmeans fit" -> (() =>
+        KMeans.fit(emb, "vec_id", "embedding", k = 8, iters = 2)))
       val g3emb = emb.join(g3.select(col("doc_id").as("vec_id")), "vec_id")
-      val semKeep = labeled(s, "funnelv2: semdedup") {
+      val semKeep = Overlap.labeled(s, "funnelv2: semdedup") {
         KMeans.semDedup(g3emb, "vec_id", "embedding", cents,
           threshold = 0.3, materialize = true)
       }.select(col("vec_id").as("doc_id"))
@@ -3308,7 +3266,7 @@ object SparkEntry {
       // second lineage cut: the resampled spine is the layout stages'
       // only input, and the DSIR chain above it is the other
       // multi-reference subtree (toks x3, scored x2 via the PPS total)
-      val g6 = labeled(s, "funnelv2: dsir resample") {
+      val g6 = Overlap.labeled(s, "funnelv2: dsir resample") {
         Sampling.weightedSample(
             scored.withColumn("rs_key",
               concat(lit("rs:"), col("doc_id").cast("string"))),

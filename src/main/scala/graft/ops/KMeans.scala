@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Overlap
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -653,10 +654,9 @@ object KMeans {
     *
     * The m fits are INDEPENDENT, and each is a chain of small
     * driver-paced jobs (k seed passes + the Lloyd rounds) whose cost is
-    * dominated by job-scheduling latency, not compute — so they run as
-    * m concurrent Spark job chains (the [[graft.pipeline.Runner]]
-    * parallel-ingest discipline), quartering the wall clock without
-    * touching the deterministic per-subspace result. */
+    * dominated by job-scheduling latency, not compute — so they overlap
+    * ([[graft.Overlap]]), without touching the deterministic
+    * per-subspace result. */
   def pqFit(df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int,
             iters: Int): Seq[Seq[Centroid]] = {
     // The input is evaluated by the dims check AND by each of the m
@@ -675,17 +675,11 @@ object KMeans {
       val dim = mm.getInt(0)
       require(dim % m == 0, s"pqFit: dim $dim not divisible into $m subspaces")
       val sub = dim / m
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        Await.result(Future.sequence((0 until m).map { s =>
-          Future(fit(base.select(col(idCol),
-              slice(col(vecCol), s * sub + 1, sub).as("__sub")),
-            idCol, "__sub", k, iters))
-        }), Duration.Inf)
-      } finally { pool.shutdown(); () }
+      Overlap(df.sparkSession, m)((0 until m).map { s =>
+        s"pq fit: subspace $s" -> (() => fit(base.select(col(idCol),
+            slice(col(vecCol), s * sub + 1, sub).as("__sub")),
+          idCol, "__sub", k, iters))
+      })
     } finally { base.unpersist(); () }
   }
 

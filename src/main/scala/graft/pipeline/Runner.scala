@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Overlap
 import graft.config.Registry
 import graft.merge.SmartUpdate
 import graft.store.{SinkTypes, TableStore}
@@ -205,53 +206,32 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     commit(Seq(merge(tableName, canonical0, valueFields, gateHours,
       WholeTable).get)).head
 
-  /** Ingest fan-out sized to the session instead of a hard-coded literal.
-    * Each dataset's merge is driver-side parse plus a handful of small
-    * Spark jobs, so the sweet spot sits well under the executor thread
-    * count: the measured optimum at fixture scale is 8 on local[32]
-    * (round 10: parallelism 8 → 10.2s vs 13 → 12.0s median, sf0.1 —
-    * higher fan-out adds scheduler/IO contention, not throughput).
-    * defaultParallelism/4 reproduces that 8 on local[32], scales down on
-    * a smaller driver (floor 2 keeps some overlap), and is capped at 16
-    * on bigger ones — concurrent jobs contend on the driver's scheduler
-    * and the store's commit lock, not on executor threads, so fan-out
-    * past ~2× the optimum only adds contention.
-    *
-    * Shape probed off the measured point (round 16, three independent
-    * quiet-box `panel_all` sweeps at sf0.1): fan-out 4 is consistently
-    * ~45% slower (mins 8.3-9.6s vs 5.7-6.6s at 8); 8 and 16 are
-    * statistically indistinguishable (mins 5.7-6.6 vs 5.4-6.1s, medians
-    * overlapping across sessions) — the response surface is FLAT from 8
-    * to 16 and falls off below. dp/4 picks the flat region's low end,
-    * which also minimizes commit-lock/scheduler contention. */
+  /** Ingest fan-out sized to the session: defaultParallelism/4, within
+    * [2, 16]. Each dataset's merge is driver-side work plus a handful of
+    * small Spark jobs, so the optimum sits well under the executor thread
+    * count: 8 on local[32], with 8-16 flat and 4 ~45% slower (COVERAGE.md,
+    * rounds 10 and 16). Past that, concurrent merges contend on the
+    * driver's scheduler and the store's commit lock. */
   def defaultIngestParallelism: Int =
     Runner.ingestParallelismFor(spark.sparkContext.defaultParallelism)
 
   /** §7.6(a): per-dataset PARALLEL execution — the reference's sequential
-    * 26-dataset loop (main_azure.py:136-152) becomes a pool of concurrent
-    * Spark jobs (the scheduler interleaves them across executor threads).
-    * Per-dataset table writes target distinct directories and are safe
-    * concurrently; the SHARED writes — datarevisions append, metadata —
-    * are applied once, serially, at the end. A dataset whose merge fails
-    * records status "error" and the rest of the run — its siblings'
-    * revisions and last_run included — still commits. The pool is
-    * [[defaultIngestParallelism]] wide, never wider than the dataset
-    * list. */
+    * 26-dataset loop (main_azure.py:136-152) becomes overlapped merges
+    * ([[graft.Overlap]], [[defaultIngestParallelism]] wide, jobs labeled
+    * `ingest: <table>`), because each is a few small Spark jobs the
+    * scheduler can interleave. Per-dataset table writes target distinct
+    * directories and are safe concurrently; the SHARED writes —
+    * datarevisions append, metadata — are applied once, serially, at the
+    * end. A dataset whose merge fails records status "error" and the rest
+    * of the run — its siblings' revisions and last_run included — still
+    * commits. */
   def runAllParallel(datasets: Seq[(String, DataFrame, Seq[String])],
-                     gateHours: Int = 24): Seq[DatasetResult] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(defaultIngestParallelism, math.max(1, datasets.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = datasets.map { case (table, df, vf) =>
-        Future(merge(table, df, vf, gateHours, WholeTable)
-          .getOrElse(failed(table)))
-      }
-      commit(Await.result(Future.sequence(futures), Duration.Inf))
-    } finally pool.shutdown()
-  }
+                     gateHours: Int = 24): Seq[DatasetResult] =
+    commit(Overlap(spark, defaultIngestParallelism)(
+      datasets.map { case (table, df, vf) =>
+        s"ingest: $table" -> (() =>
+          merge(table, df, vf, gateHours, WholeTable).getOrElse(failed(table)))
+      }))
 
   /** Scale path: the same merge with a YEAR-partitioned table layout — the
     * existing side is read with a partition filter on the years the

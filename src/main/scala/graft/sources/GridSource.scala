@@ -2,9 +2,9 @@ package graft.sources
 
 import graft.config.Registry
 import graft.ops.{Coerce, FiscalDates, Reshape}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType, LongType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** EDB grid source: A1-range cell extraction + the monthly/quarterly
   * reshape-to-long pipelines.
@@ -48,54 +48,62 @@ object GridSource {
     * anything else is the comma-separated fixture dialect. All yield the
     * same sliced grid. */
   def readGrid(spark: SparkSession, path: String, dataLocation: String): DataFrame = {
-    val (r1, c1, r2, c2) = parseRange(dataLocation)
     val lower = path.toLowerCase
     val rows: Vector[Vector[String]] =
       if (lower.endsWith(".xlsx")) XlsxReader.readFirstSheet(path)
       else if (lower.endsWith(".xls")) XlsReader.readFirstSheet(path)
-      else {
-        val lines = scala.io.Source.fromFile(path)
-        try lines.getLines().toVector.map(_.split(",", -1).toVector)
-        finally lines.close()
-      }
-    val sliced = rows.slice(r1, r2 + 1).zipWithIndex.map { case (cells, i) =>
-      val window = (c1 to c2).map(j =>
-        if (j < cells.length && cells(j) != null && cells(j).nonEmpty) cells(j)
-        else null)
-      Row.fromSeq(i.toLong +: window)
+      else csvRows(new java.io.FileInputStream(path))
+    val sliced = slice(rows, dataLocation).zipWithIndex.map { case (cells, i) =>
+      Row.fromSeq(i.toLong +: cells)
     }
-    val nCols = c2 - c1 + 1
-    val schema = StructType(
+    spark.createDataFrame(spark.sparkContext.parallelize(sliced, 1),
+      schema(dataLocation))
+  }
+
+  /** A sliced grid's shape: `__row_idx` plus one string cell per column. */
+  private[sources] def schema(dataLocation: String): StructType = {
+    val (_, c1, _, c2) = parseRange(dataLocation)
+    StructType(
       StructField(Reshape.RowIdxCol, LongType, nullable = false) +:
-        (0 until nCols).map(j => StructField(s"c$j", StringType, nullable = true)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(sliced, 1), schema)
+        (0 to (c2 - c1)).map(j => StructField(s"c$j", StringType, nullable = true)))
+  }
+
+  /** The rows of a headerless comma-separated grid (no quoting: the
+    * fixture dialect), decoded as UTF-8 whatever the JVM's default
+    * charset. Closes `in`. */
+  private[sources] def csvRows(in: java.io.InputStream): Vector[Vector[String]] = {
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+    try src.getLines().map(_.split(",", -1).toVector).toVector finally src.close()
+  }
+
+  /** The A1 rectangle `dataLocation` of a grid: one row per grid row, one
+    * cell per column, an empty or missing cell null. Both grid readers
+    * (this object's and the V2 `edb-grid` connector's) slice through it. */
+  private[sources] def slice(rows: Vector[Vector[String]], dataLocation: String): Vector[Vector[String]] = {
+    val (r1, c1, r2, c2) = parseRange(dataLocation)
+    rows.slice(r1, r2 + 1).map { cells =>
+      (c1 to c2).map(j =>
+        if (j < cells.length && cells(j) != null && cells(j).nonEmpty) cells(j)
+        else null).toVector
+    }
   }
 
   /** Monthly EDB pipeline: grid -> long (date, <valueColumn>), typed.
     * Mirrors azure_common_scrapers.py:117-140 exactly: header promotion,
     * melt, fiscal-date mapping (null-date rows dropped), numeric coercion
     * (null dropped), int rounding when configured, sort by date. */
-  def processMonthly(grid: DataFrame, cfg: Registry.DatasetConfig): DataFrame = {
-    val long = Reshape.promoteHeaderAndMelt(grid, "Month")
-    val dated = long
-      .withColumn("date", FiscalDates.fiscalMonthlyDate(col("Month"), col("fiscal_year")))
-      .na.drop(Seq("date"))
-      .withColumn("v", Coerce.toDoubleOrNull(col("value")))
-      .na.drop(Seq("v"))
-    val typed = cfg.valueType match {
-      case Registry.IntType => dated.withColumn("v", Coerce.roundToLong(col("v")))
-      case Registry.FloatType => dated
-    }
-    typed.select(col("date"), col("v").as(cfg.valueColumn)).orderBy("date")
-  }
+  def processMonthly(grid: DataFrame, cfg: Registry.DatasetConfig): DataFrame =
+    process(grid, cfg, "Month", FiscalDates.fiscalMonthlyDate)
 
   /** Quarterly EDB pipeline (azure_common_scrapers.py:210-237): same shape
     * with quarter labels and the quarter->first-of-next-month mapping. */
-  def processQuarterly(grid: DataFrame, cfg: Registry.DatasetConfig): DataFrame = {
-    val long = Reshape.promoteHeaderAndMelt(grid, "Quarter")
-    val dated = long
-      .withColumn("date", FiscalDates.fiscalQuarterlyDate(col("Quarter"), col("fiscal_year")))
+  def processQuarterly(grid: DataFrame, cfg: Registry.DatasetConfig): DataFrame =
+    process(grid, cfg, "Quarter", FiscalDates.fiscalQuarterlyDate)
+
+  private def process(grid: DataFrame, cfg: Registry.DatasetConfig,
+                      label: String, date: (Column, Column) => Column): DataFrame = {
+    val dated = Reshape.promoteHeaderAndMelt(grid, label)
+      .withColumn("date", date(col(label), col("fiscal_year")))
       .na.drop(Seq("date"))
       .withColumn("v", Coerce.toDoubleOrNull(col("value")))
       .na.drop(Seq("v"))

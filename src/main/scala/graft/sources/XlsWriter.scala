@@ -352,10 +352,7 @@ object XlsWriter {
   /** Convert a comma-separated grid file (the fixture dialect) to a legacy
     * workbook alongside it; returns the .xls path. */
   def fromCsv(csvPath: String, xlsPath: String): String = {
-    val src = scala.io.Source.fromFile(csvPath)
-    val rows = try src.getLines().toVector.map(_.split(",", -1).toVector)
-    finally src.close()
-    write(xlsPath, rows)
+    write(xlsPath, GridSource.csvRows(new java.io.FileInputStream(csvPath)))
     xlsPath
   }
 }

@@ -98,10 +98,7 @@ object XlsxWriter {
   /** Convert a comma-separated grid file (no quoting — the fixture dialect)
     * to a workbook alongside it; returns the .xlsx path. */
   def fromCsv(csvPath: String, xlsxPath: String): String = {
-    val src = scala.io.Source.fromFile(csvPath)
-    val rows = try src.getLines().toVector.map(_.split(",", -1).toVector)
-    finally src.close()
-    write(xlsxPath, rows)
+    write(xlsxPath, GridSource.csvRows(new java.io.FileInputStream(csvPath)))
     xlsxPath
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import java.util
@@ -39,7 +39,7 @@ class EdbGridSource extends TableProvider with DataSourceRegister {
     Option(options.get("dataLocation")).getOrElse("A6:K18")
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EdbGridSource.schemaFor(location(options))
+    GridSource.schema(location(options))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
@@ -54,13 +54,6 @@ class EdbGridSource extends TableProvider with DataSourceRegister {
 }
 
 object EdbGridSource {
-  def schemaFor(dataLocation: String): StructType = {
-    val (_, c1, _, c2) = GridSource.parseRange(dataLocation)
-    StructType(
-      StructField("__row_idx", LongType, nullable = false) +:
-        (0 to (c2 - c1)).map(j => StructField(s"c$j", StringType, nullable = true)))
-  }
-
   /** Decode Spark's JSON-encoded `paths` option (a string array). A real
     * JSON parse (Jackson ships with Spark) — string surgery on ',' would
     * shred any path legally containing a comma or an escaped quote. */
@@ -89,11 +82,11 @@ private[v2] class GridScanBuilder(paths: Seq[String], dataLocation: String,
   private var required: StructType = full
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new GridScan(paths, dataLocation, full, required)
+  override def build(): Scan = new GridScan(paths, dataLocation, required)
 }
 
 private[v2] class GridScan(paths: Seq[String], dataLocation: String,
-                           full: StructType, required: StructType)
+                           required: StructType)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -116,18 +109,17 @@ private[v2] class GridScan(paths: Seq[String], dataLocation: String,
     }.map(p => GridPartition(p, dataLocation): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GridReaderFactory(full.fieldNames, required.fieldNames)
+    new GridReaderFactory(required.fieldNames)
 }
 
 private[v2] case class GridPartition(path: String, dataLocation: String)
     extends InputPartition
 
-private[v2] class GridReaderFactory(fullCols: Array[String],
-                                    requiredCols: Array[String])
+private[v2] class GridReaderFactory(requiredCols: Array[String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val gp = partition.asInstanceOf[GridPartition]
-    new GridReader(gp.path, gp.dataLocation, fullCols, requiredCols)
+    new GridReader(gp.path, gp.dataLocation, requiredCols)
   }
 }
 
@@ -136,25 +128,17 @@ private[v2] class GridReaderFactory(fullCols: Array[String],
   * columns only). Grids are config-bounded (~13x11) so the whole slice fits
   * trivially in task memory. */
 private[v2] class GridReader(path: String, dataLocation: String,
-                             fullCols: Array[String], requiredCols: Array[String])
+                             requiredCols: Array[String])
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val (r1, c1, r2, c2) = GridSource.parseRange(dataLocation)
     val p = new Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    lines.slice(r1, r2 + 1).zipWithIndex.iterator.map { case (line, i) =>
-      val cells = line.split(",", -1)
+    val in = p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
+    val grid = GridSource.slice(GridSource.csvRows(in), dataLocation)
+    grid.zipWithIndex.iterator.map { case (cells, i) =>
       val byName: String => Any = {
         case "__row_idx" => i.toLong
-        case col =>
-          val j = c1 + col.drop(1).toInt
-          if (j < cells.length && cells(j).nonEmpty) UTF8String.fromString(cells(j))
-          else null
+        case col => UTF8String.fromString(cells(col.drop(1).toInt))
       }
       InternalRow.fromSeq(requiredCols.toSeq.map(byName))
     }

@@ -108,14 +108,29 @@ class SourcesSpec extends SparkSuite {
   }
 
   test("DataSourceV2 edb-grid connector matches the driver-side reader") {
-    val v2 = spark.read.format("edb-grid")
-      .option("dataLocation", autoCfg.dataLocation)
-      .load(s"$fx/edb_auto_sales.csv")
-    val v1 = GridSource.readGrid(spark, s"$fx/edb_auto_sales.csv", autoCfg.dataLocation)
-    assert(v2.schema == v1.schema)
-    val a = v2.orderBy("__row_idx").collect().map(_.toSeq).toSeq
-    val b = v1.orderBy("__row_idx").collect().map(_.toSeq).toSeq
-    assert(a == b)
+    // the fixture, and a twin whose header row carries a UTF-8 label that
+    // a JVM default charset such as US-ASCII cannot decode
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"$fx/edb_auto_sales.csv"), utf8)
+    lines.set(5, "Año" + lines.get(5))
+    val ano = java.nio.file.Files.createTempFile("graft-grid-utf8", ".csv")
+    java.nio.file.Files.write(ano, lines, utf8)
+    def grids(path: String) = {
+      val v2 = spark.read.format("edb-grid")
+        .option("dataLocation", autoCfg.dataLocation).load(path)
+      (v2, GridSource.readGrid(spark, path, autoCfg.dataLocation))
+    }
+    for (path <- Seq(s"$fx/edb_auto_sales.csv", ano.toString)) {
+      val (v2, v1) = grids(path)
+      assert(v2.schema == v1.schema)
+      val a = v2.orderBy("__row_idx").collect().map(_.toSeq).toSeq
+      val b = v1.orderBy("__row_idx").collect().map(_.toSeq).toSeq
+      assert(a == b, path)
+    }
+    assert(grids(ano.toString)._2.filter(col("__row_idx") === 0)
+      .collect().head.getAs[String]("c0") == "Año")
+    val (v2, _) = grids(s"$fx/edb_auto_sales.csv")
     // the full monthly pipeline works on the connector output unchanged
     val out = GridSource.processMonthly(v2, autoCfg)
     assert(out.count() == 119)
