@@ -22,11 +22,13 @@ import org.apache.spark.sql.functions._
   * Spark-first design: a single keyed full-outer join classifies every row in
   * one distributed pass (the reference does a full scan into a driver dict —
   * its own comments flag that as the scale limit; here the join shuffles on
-  * the key, broadcast-joins automatically when one side is small). Before the
-  * join the EXISTING side is pruned to the incoming batch's key range — the
-  * min/max predicate reaches the parquet scan's row-group stats, so a merge
-  * of a small recent batch never reads years of history (fixes the scale
-  * limitation the reference flags at azure_data_tracker.py:57-59).
+  * the key, broadcast-joins automatically when one side is small). The join
+  * reads exactly the stored rows the caller hands it: a caller that can
+  * bound what a batch touches prunes before the call (the partitioned
+  * table layout reads only the batch's years, so a merge of a small recent
+  * batch never reads years of history — the scale limitation the reference
+  * flags at azure_data_tracker.py:57-59). The merged rows come out of the
+  * same pass, so writing them re-reads neither the store nor the source.
   * Per-field revision fan-out is inline_outer over an array of structs (the
   * relational form of the reference's per-field loop), not a UDTF.
   */
@@ -66,18 +68,6 @@ object SmartUpdate {
       case None => incoming.dropDuplicates(keyCol)
     }
 
-  /** Prune the existing side to the incoming batch's key range before a
-    * diff join. Everything outside [min(incoming.key), max(incoming.key)] is
-    * by definition untouched by the merge; the BETWEEN predicate pushes to
-    * the parquet scan. Costs one tiny aggregate action on incoming. */
-  def pruneToKeyRange(existing: DataFrame, incoming: DataFrame,
-                      keyCol: String): DataFrame = {
-    val r = incoming.agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"))
-      .head()
-    if (r.isNullAt(0)) existing.limit(0)
-    else existing.filter(col(keyCol).between(lit(r.get(0)), lit(r.get(1))))
-  }
-
   /** Classify incoming vs existing. Returns one row per key present in
     * either side with column `status` in {new, updated, unchanged,
     * existing_only}, incoming value fields under their own names (existing
@@ -85,46 +75,51 @@ object SmartUpdate {
     * Assumes incoming is already deduped on the key (see dedupeLastWins).
     */
   def classify(incoming: DataFrame, existing: DataFrame, keyCol: String,
-               valueFields: Seq[String]): DataFrame = {
+               valueFields: Seq[String]): DataFrame =
+    joined(incoming, existing, keyCol, valueFields).select(
+      col(keyCol) +:
+        col("status") +:
+        (valueFields.map(f => coalesce(inc(f), ex(f)).as(f)) ++
+          valueFields.map(f => coalesce(changedField(f), lit(false)).as(s"${f}_changed")) ++
+          valueFields.map(f => ex(f).try_cast("double").as(s"${f}_old")) ++
+          valueFields.map(f => inc(f).try_cast("double").as(s"${f}_new"))): _*)
+
+  /** The keyed full-outer join behind [[classify]] and [[diff]]: one row
+    * per key with `status`, the presence flags and each side's values
+    * as-is under `__inc_<f>` / `__ex_<f>`. */
+  private def joined(incoming: DataFrame, existing: DataFrame, keyCol: String,
+                     valueFields: Seq[String]): DataFrame = {
     val incP = incoming.select(
       col(keyCol) +: lit(true).as("__inc_present") +:
         valueFields.map(f => col(f).as(s"__inc_$f")): _*)
     val exP = existing.select(
       col(keyCol) +: lit(true).as("__ex_present") +:
         valueFields.map(f => col(f).as(s"__ex_$f")): _*)
-    val j = incP.join(exP, Seq(keyCol), "full_outer")
     val anyChanged = valueFields.map(changedField)
       .reduceOption(_ || _).getOrElse(lit(false))
-    val status =
+    incP.join(exP, Seq(keyCol), "full_outer").withColumn("status",
       when(col("__ex_present").isNull, "new")
         .when(col("__inc_present").isNull, "existing_only")
         .when(anyChanged, "updated")
-        .otherwise("unchanged")
-    j.select(
-      col(keyCol) +:
-        status.as("status") +:
-        (valueFields.map(f => coalesce(inc(f), ex(f)).as(f)) ++
-          valueFields.map(f => coalesce(changedField(f), lit(false)).as(s"${f}_changed")) ++
-          valueFields.map(f => ex(f).try_cast("double").as(s"${f}_old")) ++
-          valueFields.map(f => inc(f).try_cast("double").as(s"${f}_new"))): _*)
+        .otherwise("unchanged"))
   }
 
-  /** Revision records from a classify() result: one row per
+  /** Revision records from a [[joined]] result: one row per
     * (updated key, changed field), with old and new values — the CDC audit
     * trail (azure_data_tracker.py:115-127). Fan-out is inline_outer over an
     * array of per-field structs built with the Column API (no SQL string
     * interpolation — field names with quotes/spaces/backticks are safe).
     * `revisionTime` is injected (never utcnow inside the plan) so runs are
     * deterministic and oracle-checkable (SURVEY.md §7.5 risk 3). */
-  private def revisionsFromClassified(classified: DataFrame, keyCol: String,
-                                      valueFields: Seq[String], dataset: String,
-                                      revisionTime: java.sql.Timestamp): DataFrame = {
+  private def revisionsOf(joinedRows: DataFrame, keyCol: String,
+                          valueFields: Seq[String], dataset: String,
+                          revisionTime: java.sql.Timestamp): DataFrame = {
     val perField = array(valueFields.map(f => struct(
       lit(f).as("value_field"),
-      col(s"${f}_changed").as("changed"),
-      col(s"${f}_old").as("old_value"),
-      col(s"${f}_new").as("new_value"))): _*)
-    classified.filter(col("status") === "updated")
+      changedField(f).as("changed"),
+      ex(f).try_cast("double").as("old_value"),
+      inc(f).try_cast("double").as("new_value"))): _*)
+    joinedRows.filter(col("status") === "updated")
       .select(col(keyCol).as("data_date"), inline_outer(perField))
       .filter(col("changed"))
       .select(
@@ -137,40 +132,36 @@ object SmartUpdate {
   def revisions(incoming: DataFrame, existing: DataFrame, keyCol: String,
                 valueFields: Seq[String], dataset: String,
                 revisionTime: java.sql.Timestamp): DataFrame =
-    revisionsFromClassified(
-      classify(incoming, existing, keyCol, valueFields),
+    revisionsOf(joined(incoming, existing, keyCol, valueFields),
       keyCol, valueFields, dataset, revisionTime)
 
   /** Result counts of a merge, mirroring the reference's return value. */
   case class MergeCounts(newRows: Long, updated: Long, revisions: Long)
 
-  /** One classified batch: its counts, its revision rows, the keys it adds
-    * or replaces, and their incoming rows. */
-  final case class Diff(keyCol: String, counts: MergeCounts,
+  /** One classified batch: its counts, how many incoming rows it held,
+    * its revision rows, the keys it adds or replaces, and the merged rows:
+    * every stored row the diff read, with each new or updated key taking
+    * its incoming row and every other key keeping its stored row. */
+  final case class Diff(counts: MergeCounts, incomingRows: Long,
                         revisions: DataFrame, changedKeys: DataFrame,
-                        fresh: DataFrame) {
-    /** `existing` with every new or updated key taking its incoming row;
-      * unchanged and untouched rows stay as stored. */
-    def applyTo(existing: DataFrame): DataFrame =
-      existing.join(changedKeys, Seq(keyCol), "left_anti")
-        .select(fresh.columns.toSeq.map(col): _*)
-        .unionByName(fresh)
-  }
+                        merged: DataFrame)
 
-  /** Classify a deduped batch against the existing rows it can touch and
-    * derive everything a write needs from ONE checkpointed classify pass:
-    * the three counts (a single aggregate action), the revision log, and
-    * the new-or-updated keys with their incoming rows.
+  /** Classify a deduped batch against the stored rows it can touch and
+    * derive everything a write needs from ONE checkpointed join, which
+    * holds each key's incoming and stored values: the three counts and the
+    * incoming-row count (a single aggregate action), the revision log, the
+    * new-or-updated keys and the merged rows.
     *
-    * localCheckpoint, not cache: the classified rows back an RDD with NO
-    * file source in the plan, so (a) every frame of the Diff stays correct
-    * after the caller overwrites the very files `existing` read — a cached
-    * plan would be refreshed/recomputed from the post-merge table (empty
-    * CDC) or chase deleted pre-swap files on eviction — and (b) nothing is
+    * localCheckpoint, not cache: the joined rows back an RDD with NO file
+    * source in the plan, so (a) every frame of the Diff stays correct
+    * after the caller overwrites the very files `existing` read — `merged`
+    * is exactly what gets written over them, and a cached plan would be
+    * refreshed/recomputed from the post-merge table (empty CDC) or chase
+    * deleted pre-swap files on eviction; (b) writing `merged` re-reads
+    * neither the store nor the incoming frame's source; and (c) nothing is
     * registered with the CacheManager, so per-dataset merges don't
     * accumulate cache entries the caller can't release (the RDD is GC'd
-    * with the frame). The counts aggregate makes the diff eager anyway, so
-    * this adds no extra action.
+    * with the frame).
     *
     * PARITY NOTE: an updated key takes the incoming row VERBATIM —
     * including fields whose incoming value is null/NaN (which changedField
@@ -185,38 +176,35 @@ object SmartUpdate {
   def diff(incoming: DataFrame, existing: DataFrame, keyCol: String,
            valueFields: Seq[String], dataset: String,
            revisionTime: java.sql.Timestamp): Diff = {
-    val cls = classify(incoming, existing, keyCol, valueFields)
-      .localCheckpoint(true)
-    val changedKeys = cls.filter(col("status").isin("new", "updated"))
-      .select(col(keyCol))
-    // one action for all three counts: revisions = total changed flags
+    val j = joined(incoming, existing, keyCol, valueFields).localCheckpoint(true)
+    val changed = col("status").isin("new", "updated")
+    // one action for every count: revisions = total changed fields
     val changedSum = valueFields.map(f =>
-      sum(col(s"${f}_changed").cast("long"))).reduceOption(_ + _)
+      sum(changedField(f).cast("long"))).reduceOption(_ + _)
       .getOrElse(lit(0L))
-    val row = cls.agg(
+    val row = j.agg(
       sum(when(col("status") === "new", 1L).otherwise(0L)).as("n"),
       sum(when(col("status") === "updated", 1L).otherwise(0L)).as("u"),
-      changedSum.as("r")).head()
+      changedSum.as("r"),
+      count(col("__inc_present")).as("i")).head()
     def g(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-    Diff(keyCol, MergeCounts(g(0), g(1), g(2)),
-      revisionsFromClassified(cls, keyCol, valueFields, dataset, revisionTime),
-      changedKeys,
-      incoming.join(changedKeys, Seq(keyCol), "left_semi")
-        .select(col(keyCol) +: valueFields.map(col): _*))
+    Diff(MergeCounts(g(0), g(1), g(2)), g(3),
+      revisionsOf(j, keyCol, valueFields, dataset, revisionTime),
+      j.filter(changed).select(col(keyCol)),
+      j.select(col(keyCol) +: valueFields.map(f =>
+        when(changed, inc(f)).otherwise(ex(f)).as(f)): _*))
   }
 
-  /** Full merge: dedupe, classify against the key-range-pruned existing
-    * side, and build the post-merge table + revision log. Returns
-    * (mergedTable, revisions, counts). The merged table is (existing rows
-    * not superseded) ∪ (new) ∪ (updated) — unchanged rows keep their
-    * EXISTING values/rows (never rewritten semantically). */
+  /** Full merge: dedupe, diff against `existing`, and return (mergedTable,
+    * revisions, counts). The merged table is every existing row, with new
+    * and updated keys taking their incoming row — unchanged rows keep
+    * their EXISTING values/rows (never rewritten semantically). */
   def merge(incoming0: DataFrame, existing: DataFrame, keyCol: String,
             valueFields: Seq[String], dataset: String,
             revisionTime: java.sql.Timestamp)
       : (DataFrame, DataFrame, MergeCounts) = {
-    val incoming = dedupeLastWins(incoming0, keyCol)
-    val d = diff(incoming, pruneToKeyRange(existing, incoming, keyCol),
-      keyCol, valueFields, dataset, revisionTime)
-    (d.applyTo(existing), d.revisions, d.counts)
+    val d = diff(dedupeLastWins(incoming0, keyCol), existing, keyCol,
+      valueFields, dataset, revisionTime)
+    (d.merged, d.revisions, d.counts)
   }
 }

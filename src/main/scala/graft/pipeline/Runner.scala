@@ -26,12 +26,11 @@ object Runner {
 
   /** The fan-out formula behind defaultIngestParallelism, factored out so
     * the shape is testable against synthetic session widths (the suite
-    * session is not local[32]). The /4 divisor encodes the DRIVER-parse
-    * ingest path (each slot burns a core parsing workbook grids before its
-    * tiny Spark jobs; probed flat across 4/8/16 on local[32], COVERAGE.md
-    * round 15) — if the executor-side V2 `edb-grid` source ever becomes
-    * the default ingest path, the parse cost moves off the driver and the
-    * min(16, _) cap becomes the binding term to revisit. */
+    * session is not local[32]). Callers parse their sources before
+    * runAllParallel, so a slot holds one dataset's merge: driver-side
+    * planning plus a few small Spark jobs. The /4 divisor was probed flat
+    * across 4/8/16 on local[32] (COVERAGE.md round 15); past min(16, _)
+    * concurrent merges only contend on the driver's scheduler. */
   def ingestParallelismFor(defaultParallelism: Int): Int =
     math.min(16, math.max(2, defaultParallelism / 4))
 
@@ -82,12 +81,14 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     * merge reads and how the merged rows are written; everything else is
     * [[merge]]'s. */
   private sealed trait Layout {
+    /** Whether [[read]] runs an action over `incoming`: the diff then
+      * reads it a second time, so [[merge]] caches it. */
+    def readsIncoming: Boolean
     /** The stored rows, at rest, that `incoming` can touch, or None when
-      * `incoming` is empty: the layout's one action over the batch. */
+      * the layout finds `incoming` empty. */
     def read(table: String, incoming: DataFrame): Option[DataFrame]
-    /** Write the diff's new and updated rows over `pol.existing`, the
-      * [[read]] rows on the engine surface. Called only when the diff
-      * changes something: a re-run with nothing new writes NOTHING. */
+    /** Write the diff's merged rows. Called only when the diff changes
+      * something: a re-run with nothing new writes NOTHING. */
     def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit
   }
 
@@ -95,11 +96,11 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     * control-table-sized series. The merge reads the whole table — the
     * rewrite needs every row anyway. */
   private object WholeTable extends Layout {
+    val readsIncoming = false
     def read(table: String, incoming: DataFrame): Option[DataFrame] =
-      if (incoming.isEmpty) None else Some(store.readOrEmpty(table, incoming))
+      Some(store.readOrEmpty(table, incoming))
     def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit =
-      store.overwrite(pol.tableName, pol.writeCast(d.applyTo(pol.existing)),
-        maxFiles = 1)
+      store.overwrite(pol.tableName, pol.writeCast(d.merged), maxFiles = 1)
   }
 
   /** `table/__year=YYYY/`: a merge reads only the years the batch touches
@@ -110,55 +111,62 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     private val year = substring(col("date"), 1, 4).cast("int")
     private def years(df: DataFrame) =
       df.select(year).distinct().collect().map(_.getInt(0)).toSeq
+    val readsIncoming = true
     def read(table: String, incoming: DataFrame): Option[DataFrame] =
       Some(years(incoming)).filter(_.nonEmpty).map(ys =>
         store.readOrEmpty(table, incoming.withColumn("__year", year))
           .filter(col("__year").isin(ys: _*)))
-    def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit = {
-      val kept = pol.existing.filter(col("__year").isin(years(d.changedKeys): _*))
-      store.overwritePartitions(pol.tableName,
-        pol.writeCast(d.applyTo(kept).withColumn("__year", year)), Seq("__year"))
-    }
+    def write(d: SmartUpdate.Diff, pol: SinkTypes.MergePolicy): Unit =
+      store.overwritePartitions(pol.tableName, pol.writeCast(d.merged
+        .withColumn("__year", year)
+        .filter(col("__year").isin(years(d.changedKeys): _*))), Seq("__year"))
   }
 
-  private def failed(tableName: String) =
-    Merged(DatasetResult(tableName, "error", 0, 0, 0), None)
+  /** A dataset's outcome when nothing merged: no_data, skipped or error. */
+  private def unmerged(tableName: String, status: String) =
+    Merged(DatasetResult(tableName, status, 0, 0, 0), None)
 
-  /** The one merge of one dataset, for every caller and layout: dedupe and
-    * cache the incoming frame, no_data on empty input, the 24 h gate, the
-    * declared-type policy, the smart_update diff and the table write. A
-    * failure comes back as the Try's failure, never half-applied: the
-    * table write is the last step and is atomic.
+  /** The one merge of one dataset, for every caller and layout: dedupe the
+    * incoming frame, the 24 h gate, the declared-type policy, the
+    * smart_update diff and the table write. A failure comes back as the
+    * Try's failure, never half-applied: the table write is the last step
+    * and is atomic.
     *
-    * The incoming frame is cached because the merge fires several actions
-    * against it (the layout's read, classify, the write's fresh rows) —
-    * the source pipeline (file read + reshape + sort) then runs once, and
-    * the dedupe shuffle with it. The revisions are a filter over the
-    * diff's checkpoint (an RDD-backed plan): safe to hand out lazily past
-    * the write and the unpersist. */
+    * Under an open gate the diff reads the incoming frame once and its
+    * incoming-row count tells no_data from a merge; the table write and
+    * the revisions come from the diff's checkpoint, so neither re-reads
+    * the incoming frame's source. Only a closed gate asks whether the
+    * batch is empty, to tell no_data from skipped. A layout whose read
+    * also runs an action over the batch gets it cached for the two reads. */
   private def merge(tableName: String, canonical0: DataFrame,
                     valueFields: Seq[String], gateHours: Int,
                     layout: Layout): Try[Merged] = Try {
-    val canonical = SmartUpdate.dedupeLastWins(canonical0, "date").cache()
-    try layout.read(tableName, canonical) match {
-      case None => Merged(DatasetResult(tableName, "no_data", 0, 0, 0), None)
-      case Some(_) if !shouldUpdate(tableName, gateHours) =>
-        Merged(DatasetResult(tableName, "skipped", 0, 0, 0), None)
-      case Some(touched) =>
-        // reads normalize declared decimals to the engine's double surface;
-        // the write casts back to the declared at-rest types — but ONLY for
-        // tables created under the policy (legacy double tables keep their
-        // layout), and incoming values are snapped to the declared scale
-        // first so sink rounding can never churn the tolerance compare
-        val pol = SinkTypes.mergePolicy(touched, tableName,
-          !store.exists(tableName), canonical)
-        val d = SmartUpdate.diff(pol.incoming, pol.existing, "date",
-          valueFields, tableName, now())
-        val c = d.counts
-        if (c.newRows > 0 || c.updated > 0) layout.write(d, pol)
-        Merged(DatasetResult(tableName, "success", c.newRows, c.updated,
-          c.revisions), if (c.revisions > 0) Some(d.revisions) else None)
-    } finally canonical.unpersist()
+    if (!shouldUpdate(tableName, gateHours))
+      unmerged(tableName, if (canonical0.isEmpty) "no_data" else "skipped")
+    else {
+      val deduped = SmartUpdate.dedupeLastWins(canonical0, "date")
+      val canonical = if (layout.readsIncoming) deduped.cache() else deduped
+      try layout.read(tableName, canonical) match {
+        case None => unmerged(tableName, "no_data")
+        case Some(touched) =>
+          // reads normalize declared decimals to the engine's double surface;
+          // the write casts back to the declared at-rest types — but ONLY for
+          // tables created under the policy (legacy double tables keep their
+          // layout), and incoming values are snapped to the declared scale
+          // first so sink rounding can never churn the tolerance compare
+          val pol = SinkTypes.mergePolicy(touched, tableName,
+            !store.exists(tableName), canonical)
+          val d = SmartUpdate.diff(pol.incoming, pol.existing, "date",
+            valueFields, tableName, now())
+          val c = d.counts
+          if (d.incomingRows == 0) unmerged(tableName, "no_data")
+          else {
+            if (c.newRows > 0 || c.updated > 0) layout.write(d, pol)
+            Merged(DatasetResult(tableName, "success", c.newRows, c.updated,
+              c.revisions), if (c.revisions > 0) Some(d.revisions) else None)
+          }
+      } finally if (layout.readsIncoming) canonical.unpersist()
+    }
   }
 
   /** The shared writes of a run, applied once and serially: ONE revisions
@@ -192,10 +200,10 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
   def runFetched(tableName: String, fetched: Option[Array[Byte]],
                  parse: Array[Byte] => DataFrame, valueFields: Seq[String],
                  gateHours: Int = 24): DatasetResult =
-    commit(Seq(fetched.fold(failed(tableName)) { bytes =>
+    commit(Seq(fetched.fold(unmerged(tableName, "error")) { bytes =>
       Try(parse(bytes))
         .flatMap(merge(tableName, _, valueFields, gateHours, WholeTable))
-        .getOrElse(failed(tableName))
+        .getOrElse(unmerged(tableName, "error"))
     })).head
 
   /** Run one dataset: canonical long frame (date: 'YYYY-MM-DD' string,
@@ -230,7 +238,7 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     commit(Overlap(spark, defaultIngestParallelism)(
       datasets.map { case (table, df, vf) =>
         s"ingest: $table" -> (() =>
-          merge(table, df, vf, gateHours, WholeTable).getOrElse(failed(table)))
+          merge(table, df, vf, gateHours, WholeTable).getOrElse(unmerged(table, "error")))
       }))
 
   /** Scale path: the same merge with a YEAR-partitioned table layout — the

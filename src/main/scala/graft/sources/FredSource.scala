@@ -22,10 +22,18 @@ import org.apache.spark.sql.functions._
   */
 object FredSource {
 
+  /** The part of a response body the pipeline reads. Declared, so a read
+    * runs no schema-inference job over the file. */
+  private val Schema = "observations array<struct<date:string,value:string>>"
+
   /** Raw fixture read: one JSON document with an `observations` array. */
   def readObservations(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", true).json(path)
-      .select(explode(col("observations")).as("o"))
+    spark.read.schema(Schema).option("multiLine", true).json(path)
+      // a body without the array (an API error object, an HTML page) fails
+      // the dataset rather than reading as an empty series
+      .select(explode(when(col("observations").isNull,
+        raise_error(lit(s"$path: no FRED observations array")))
+        .otherwise(col("observations"))).as("o"))
       .select(col("o.date").as("date_s"), col("o.value").as("value_s"))
 
   /** Full FRED pipeline: raw observations -> (date, <valueColumn>). */

@@ -5,6 +5,7 @@ import graft.ops.{Coerce, FiscalDates, Reshape}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** EDB grid source: A1-range cell extraction + the monthly/quarterly
   * reshape-to-long pipelines.
@@ -56,8 +57,9 @@ object GridSource {
     val sliced = slice(rows, dataLocation).zipWithIndex.map { case (cells, i) =>
       Row.fromSeq(i.toLong +: cells)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(sliced, 1),
-      schema(dataLocation))
+    // a local relation, not an RDD: the header collect and the plans over
+    // a grid this small run on the driver without a Spark job
+    spark.createDataFrame(sliced.asJava, schema(dataLocation))
   }
 
   /** A sliced grid's shape: `__row_idx` plus one string cell per column. */

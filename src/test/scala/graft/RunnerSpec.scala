@@ -4,9 +4,11 @@ import graft.config.Registry
 import graft.pipeline.Runner
 import graft.sources.GridSource
 import graft.store.TableStore
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** End-to-end lifecycle (VERDICT round-1 item 4): two consecutive runs
   * produce (N new, 0 updated) then (0 new, 0 updated); the 24h gate skips
@@ -346,6 +348,81 @@ class RunnerSpec extends SparkSuite {
     assert(reread.getLastRun(cfg.tableName).contains(Timestamp.valueOf("2025-06-03 00:00:00")))
     assert(reread.getLastRun(gasCfg.tableName).isEmpty)
     assert(!store.exists(gasCfg.tableName))
+  }
+
+  // the two table layouts behind one merge: each law below holds on both
+  private val layouts = Seq[(String,
+      (Runner, String, DataFrame, Seq[String], Int) => Runner.DatasetResult)](
+    "whole-table" -> ((r, t, df, vf, g) => r.runDataset(t, df, vf, g)),
+    "partitioned" -> ((r, t, df, vf, g) => r.runDatasetPartitioned(t, df, vf, g)))
+
+  /** Every file under the store, with its size and mtime. */
+  private def storeFiles(store: TableStore): Set[(String, Long, Long)] = {
+    val root = java.nio.file.Paths.get(store.path("x")).getParent
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(f =>
+      (root.relativize(f).toString, Files.size(f),
+        Files.getLastModifiedTime(f).toMillis)).toSet
+    finally walk.close()
+  }
+
+  /** `n` monthly rows from 2020-01 on, from a non-local source, each value
+    * (its month index) passed through `value`. */
+  private def monthly(n: Int = 48, value: Column => Column = identity): DataFrame =
+    spark.range(0, n, 1, 2).select(
+      date_format(add_months(lit("2020-01-01").cast("date"), col("id").cast("int")),
+        "yyyy-MM-dd").as("date"),
+      value(col("id").cast("double")).as("value"))
+
+  for ((layout, run) <- layouts) {
+    test(s"$layout: an updated row's null or NaN other field is stored verbatim") {
+      import spark.implicits._
+      val (store, runner, _) = newEnv()
+      val base = Seq(("2024-01-01", Some(1.0), Some(2.0)),
+        ("2024-02-01", Some(3.0), Some(4.0))).toDF("date", "a", "b")
+      run(runner, "parity", base, Seq("a", "b"), 0)
+      // `a` is null or NaN, so only `b` counts and is logged; the stored
+      // row is still the whole incoming row (the PARITY NOTE in SmartUpdate)
+      val inc = Seq(("2024-01-01", Some(Double.NaN), Some(5.0)),
+        ("2024-02-01", None, Some(6.0))).toDF("date", "a", "b")
+      val r = run(runner, "parity", inc, Seq("a", "b"), 0)
+      assert(r.status == "success" && r.newRows == 0 && r.updated == 2 &&
+        r.revisions == 2)
+      val rows = store.read("parity").orderBy("date").collect()
+      assert(rows.length == 2)
+      assert(rows(0).getAs[Double]("a").isNaN && rows(0).getAs[Double]("b") == 5.0)
+      assert(rows(1).isNullAt(rows(1).fieldIndex("a")) &&
+        rows(1).getAs[Double]("b") == 6.0)
+      assert(store.read(Registry.RevisionsTable).collect()
+        .map(_.getAs[String]("value_field")).toSeq == Seq("b", "b"))
+    }
+
+    test(s"$layout: a merge evaluates its incoming frame exactly once") {
+      val (store, runner, _) = newEnv()
+      run(runner, "once", monthly(), Seq("value"), 0)
+      val acc = spark.sparkContext.longAccumulator(s"$layout rows")
+      val tap = udf((d: String) => { acc.add(1); d })
+      // 12 rows change (2021), 4 are new (2024): a merge that writes, so
+      // the layout's read, the diff and the write all run; the tap is on
+      // the key, which every read of the frame needs
+      val next = monthly(52, v => when(v.between(12, 23), v + 100).otherwise(v))
+        .withColumn("date", tap(col("date")))
+      val r = run(runner, "once", next, Seq("value"), 0)
+      assert(r.status == "success" && r.newRows == 4 && r.updated == 12)
+      assert(acc.value == 52L) // every source row, tapped once
+      assert(store.read("once").count() == 52)
+    }
+
+    test(s"$layout: a closed gate gives no_data or skipped and touches nothing") {
+      val (store, runner, setNow) = newEnv()
+      assert(run(runner, "gated", monthly(), Seq("value"), 24).status == "success")
+      val before = storeFiles(store)
+      setNow("2025-06-01 10:00:00") // inside the 24 h window
+      assert(run(runner, "gated", monthly().limit(0), Seq("value"), 24).status == "no_data")
+      assert(run(runner, "gated", monthly(value = _ + 1), Seq("value"), 24).status == "skipped")
+      assert(storeFiles(store) == before)
+      assert(runner.getLastRun("gated").contains(Timestamp.valueOf("2025-06-01 00:00:00")))
+    }
   }
 
   test("ingest fan-out derives from the session, bounded [2,16]") {

@@ -89,6 +89,24 @@ class SourcesSpec extends SparkSuite {
       d.endsWith("-07-01") || d.endsWith("-10-01")))
   }
 
+  test("FRED: a body without an observations array fails, never reads as empty") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fred")
+    for ((name, body) <- Seq(
+        "api_error.json" -> """{"error_code": 400, "error_message": "Bad Request"}""",
+        "html.json" -> "<html>maintenance</html>")) {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      val e = intercept[Exception] {
+        FredSource.readObservations(spark, f.toString).collect()
+      }
+      assert(e.getMessage.contains("no FRED observations array"), name)
+    }
+    // an empty array is a valid body with no rows
+    val empty = dir.resolve("empty.json")
+    java.nio.file.Files.write(empty, """{"observations": []}""".getBytes("UTF-8"))
+    assert(FredSource.readObservations(spark, empty.toString).count() == 0)
+  }
+
   test("NYU: fuzzy header resolution, percent heuristic, dropna-any policy") {
     val sheet = NyuSource.readSheet(spark, s"$fx/nyu_erp.csv")
     val out = NyuSource.process(sheet)

@@ -138,6 +138,24 @@ class StreamingSpec extends SparkSuite {
     assert(revs.head.getAs[Double]("new_value") == 30.0)
   }
 
+  test("partitioned stream ingest reads each micro-batch once") {
+    val dir = Files.createTempDirectory("graft-streamonce").toString
+    val store = new TableStore(spark, dir)
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[StreamIngest.Obs]
+    val q = StreamIngest.ingestPartitioned(mem.toDF(), store, "sales", "sales",
+      s"$dir/_ckpt", () => Timestamp.valueOf("2025-06-01 00:00:00"),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    // the partitioned layout reads a batch twice (its years, then the
+    // diff); a second scan of the source would count every row twice
+    mem.addData(StreamIngest.Obs("2024-03-01", 1.0),
+      StreamIngest.Obs("2025-01-01", 2.0), StreamIngest.Obs("2025-02-01", 3.0))
+    q.processAllAvailable()
+    q.stop()
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(3L))
+    assert(store.read("sales").count() == 3)
+  }
+
   test("ingestPartitioned: compaction cadence gated on the batch's own revisions") {
     val dir = Files.createTempDirectory("graft-streamgate").toString
     val store = new TableStore(spark, dir)
