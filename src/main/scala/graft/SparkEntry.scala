@@ -27,7 +27,7 @@ object SparkEntry {
   /** The checked-in source-payload fixtures (FIXTURES.md), resolved
     * relative first so a checkout anywhere works, with the canonical repo
     * path as the fallback for harness runs whose cwd is elsewhere. ONE
-    * owner — the lifecycle queries and Probe all resolve through here. */
+    * owner — the lifecycle queries all resolve through here. */
   private[graft] def fixturesDir: String =
     if (java.nio.file.Files.exists(java.nio.file.Paths.get("fixtures")))
       "fixtures" else "/root/repo/fixtures"
@@ -981,14 +981,14 @@ object SparkEntry {
             "WHEN id % 2 = 1 AND b % 5 = 0 THEN q3r ^ shiftleft(CAST(3 AS BIGINT), CAST(b % 13 AS INT)) " +
             "ELSE q3r END AS q3")
         .selectExpr("id", "array(q0, q1, q2, q3) AS sh")
+      // the "index" here is DERIVED IN-PLAN from the md5 fixture
+      // expressions (production scans the persisted print store):
+      // checkpoint it so the derivation runs once, not once per
+      // consuming branch
       Dedup.quarterNearDupAgainstIndex(
-          f.filter(col("id") % 2 === 1), f.filter(col("id") % 2 === 0),
-          maxHamming = 3, hotThreshold = 64,
-          // the "index" here is DERIVED IN-PLAN from the md5 fixture
-          // expressions (production scans the persisted print store):
-          // checkpoint it once at the operator so the derivation does
-          // not run once per consuming branch
-          checkpointIndex = true)
+          f.filter(col("id") % 2 === 1),
+          f.filter(col("id") % 2 === 0).localCheckpoint(false),
+          maxHamming = 3, hotThreshold = 64)
         .orderBy("idA", "idB")
     }),
 

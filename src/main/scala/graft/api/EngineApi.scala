@@ -66,14 +66,7 @@ final class EngineApi(spark: SparkSession, store: TableStore) {
     * newest value, so a 1000-series store answers in a single shuffle of
     * (dataset, date, value) triples — no per-series driver loop. */
   def latestAll(): DataFrame = {
-    val series = Registry.allConfigs
-      .filter(c => c.kind != Registry.NyuStern && store.exists(c.tableName))
-    require(series.nonEmpty, "latestAll: no populated series")
-    val long = series.map { c =>
-      val v = Registry.snakeCase(c.valueColumn)
-      readEngine(c.tableName).select(lit(c.tableName).as("dataset"),
-        col("date"), col(v).cast("double").as("value"))
-    }.reduce(_.unionByName(_))
+    val (_, long) = singleSeriesLong("latestAll")
     long.groupBy("dataset")
       .agg(max(col("date")).as("date"),
         max_by(col("value"), col("date")).as("value"))
@@ -91,15 +84,8 @@ final class EngineApi(spark: SparkSession, store: TableStore) {
     * pivot once (one shuffle regardless of series count — Panel.panelByPivot
     * scale path). */
   def panelAll(): DataFrame = {
-    val series = Registry.allConfigs
-      .filter(c => c.kind != Registry.NyuStern && store.exists(c.tableName))
-    require(series.nonEmpty, "panelAll: no populated series")
-    val long = series.map { c =>
-      val v = Registry.snakeCase(c.valueColumn)
-      readEngine(c.tableName).select(col("date"),
-        lit(c.tableName).as("dataset"), col(v).cast("double").as("value"))
-    }.reduce(_.unionByName(_))
-    Panel.panelByPivot(long, series.map(_.tableName))
+    val (series, long) = singleSeriesLong("panelAll")
+    Panel.panelByPivot(long, series)
   }
 
   /** Full-inventory panel: every populated single-value series PLUS the
@@ -109,26 +95,33 @@ final class EngineApi(spark: SparkSession, store: TableStore) {
     * 26-dataset registry. Still one shuffle total: the NYU unpivot is a
     * generator (no exchange), then the single panelByPivot aggregation. */
   def panelFull(): DataFrame = {
-    val singles = Registry.allConfigs
+    val (singles, singleLong) = singleSeriesLong("panelFull")
+    if (!store.exists(Registry.nyuConfig.tableName))
+      Panel.panelByPivot(singleLong, singles)
+    else {
+      val nyuLong = readEngine(Registry.nyuConfig.tableName)
+        .select(col("date") +:
+          Registry.nyuValueFields.map(f => col(f).cast("double").as(f)): _*)
+        .unpivot(Array(col("date")),
+          Registry.nyuValueFields.map(col).toArray, "dataset", "value")
+      Panel.panelByPivot(singleLong.unionByName(nyuLong),
+        singles ++ Registry.nyuValueFields)
+    }
+  }
+
+  /** Every populated single-value (non-NYU) series stacked long as
+    * (date, dataset, value), with the stacked table names in registry
+    * order. `caller` names the read in the error when none is populated. */
+  private def singleSeriesLong(caller: String): (Seq[String], DataFrame) = {
+    val series = Registry.allConfigs
       .filter(c => c.kind != Registry.NyuStern && store.exists(c.tableName))
-    require(singles.nonEmpty, "panelFull: no populated series")
-    val singleLong = singles.map { c =>
+    require(series.nonEmpty, s"$caller: no populated series")
+    val long = series.map { c =>
       val v = Registry.snakeCase(c.valueColumn)
       readEngine(c.tableName).select(col("date"),
         lit(c.tableName).as("dataset"), col(v).cast("double").as("value"))
-    }
-    val nyuLong =
-      if (store.exists(Registry.nyuConfig.tableName))
-        Seq(readEngine(Registry.nyuConfig.tableName)
-          .select(col("date") +:
-            Registry.nyuValueFields.map(f => col(f).cast("double").as(f)): _*)
-          .unpivot(Array(col("date")),
-            Registry.nyuValueFields.map(col).toArray, "dataset", "value"))
-      else Seq.empty
-    val long = (singleLong ++ nyuLong).reduce(_.unionByName(_))
-    val columns = singles.map(_.tableName) ++
-      (if (nyuLong.nonEmpty) Registry.nyuValueFields else Seq.empty)
-    Panel.panelByPivot(long, columns)
+    }.reduce(_.unionByName(_))
+    (series.map(_.tableName), long)
   }
 
   /** §2.11 read path over the stored revision log. */

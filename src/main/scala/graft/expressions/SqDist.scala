@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * (ascending index, double accumulation), so results are bit-equal to
   * the interpreted path and to every SQL oracle's list_sum replay — the
   * only change is a fused primitive loop instead of per-element lambda
-  * dispatch (the distance evaluates millions to billions of times in the
-  * k-means|| candidate passes, PQ ground truth, and the exact refine).
+  * dispatch (the distance evaluates millions to billions of times in PQ
+  * ground truth and the exact refine).
   * Like [[DotProduct]], ragged inputs fold over the SHORTER length
   * (every caller guarantees equal dims; pqFit fails loudly on ragged). */
 case class SqDist(left: Expression, right: Expression)

@@ -33,11 +33,6 @@ object Analytics {
   private def seriesWindow(partCols: Seq[String], orderCol: String) =
     Window.partitionBy(partCols.map(col): _*).orderBy(col(orderCol))
 
-  /** Previous value within each series (lag 1 by date). */
-  def withPrev(df: DataFrame, partCols: Seq[String], orderCol: String,
-               valueCol: String, as: String = "prev_value"): DataFrame =
-    df.withColumn(as, lag(col(valueCol), 1).over(seriesWindow(partCols, orderCol)))
-
   /** Period-over-period absolute and percent change per series. */
   def periodChange(df: DataFrame, partCols: Seq[String], orderCol: String,
                    valueCol: String): DataFrame = {

@@ -91,8 +91,8 @@ object Bpe {
     * 1..r-1's folds (O(rounds²) work) and grows Catalyst expression
     * depth without bound. Every 8th round the table localCheckpoints —
     * fold nesting stays ≤ 8, total work O(rounds), cost one extra
-    * vocabulary-sized job per 8 rounds. Measured at depth (Probe
-    * bpedepth, 20k-word synthetic vocabulary, local[32]): 0.392 s/round
+    * vocabulary-sized job per 8 rounds. Measured at depth (20k-word
+    * synthetic vocabulary, local[32], COVERAGE.md): 0.392 s/round
     * at 250 rounds and 0.373 s/round at 1000 — FLAT, i.e. the wall
     * clock is rounds-bound on driver-paced job latency, not depth.
     * Honest ceiling: at that rate a real tokenizer's 30k merges is ~3h
@@ -157,8 +157,8 @@ object Bpe {
     * whose every speculated merge IS its own state's argmax, recorded
     * with the VERIFIED count. By induction each accepted merge is
     * precisely what the sequential fit would have chosen at that
-    * round — equality is structural, not probabilistic (and the depth
-    * probe re-checks it empirically). Misspeculation (genuinely
+    * round — equality is structural, not probabilistic (a spec
+    * re-checks it against batch 1). Misspeculation (genuinely
     * ambiguous counts, conflicts whose recount reorders the ranking)
     * just shortens the prefix — progress is always ≥ 1 merge per
     * round — and the SCHEDULE adapts to measured cost: each round is
@@ -180,8 +180,8 @@ object Bpe {
     * reduction (one roundtrip per batch), but a pair created by an
     * earlier in-batch merge can out-count a later pick that the
     * sequential fit would have preferred after its recount; the
-    * learned vocabulary can drift from the sequential one (measured by
-    * the probe). Still fully deterministic.
+    * learned vocabulary can drift from the sequential one (measured in
+    * COVERAGE.md). Still fully deterministic.
     *
     * Ranks are assigned in acceptance order; batchSize = 1 reproduces
     * the sequential merge list exactly in either mode. */
@@ -192,7 +192,7 @@ object Bpe {
   /** [[fit]] plus the number of DRIVER ROUNDTRIPS it ran (collect
     * cycles: pair-count rounds AND verification jobs both count — each
     * is one driver-paced job latency, the quantity batching exists to
-    * shrink), published by the depth probe. */
+    * shrink), which specs assert. */
   def fitCounted(corpus: DataFrame, textCol: String, rounds: Int,
                  batchSize: Int = 1,
                  strict: Boolean = true): (Seq[Merge], Int) = {
@@ -425,42 +425,10 @@ object Bpe {
     *     right) with remove-reinsert maintenance, so every round's
     *     winner is exactly the sequential one.
     * A spec pins list equality against [[fit]] on the worked example
-    * and mixed-corpus fixtures; the depth probe re-checks at 250
-    * merges on the 20k-word corpus and publishes the wall-clock at
-    * real tokenizer depths. Use [[fit]]'s distributed rounds only when
-    * the VOCABULARY itself exceeds driver memory. */
-  /** Word-table cap for [[fitLocal]]: the vocabmem probe measures the
-    * in-memory trainer's resident driver state at 1.82-1.94 KB per
-    * distinct word, LINEAR through the decade (1M -> 1.82 GB, 5M ->
-    * 9.3 GB, 10M -> 18.9 GB, 20M -> 38.8 GB; dominated by the
-    * pair->wordSet index at ~12 boxed entries/word) — so 8M words is
-    * ~15 GB, inside the 24 GB bench driver with GC headroom, while a
-    * web crawl's unbounded `\S+` vocabulary (hundreds of millions of
-    * URLs/hashes, extrapolating ~97 GB at 50M) must take the
-    * distributed rounds. Raise in proportion to a larger driver. */
-  val FitLocalMaxWords: Long = 8000000L
-
-  /** Estimated distinct `\S+` vocabulary of a corpus: ONE
-    * approx_count_distinct aggregate — map-side HLL partials, a
-    * sketch-sized exchange, nothing driver-bound. ±~2% relative error
-    * is irrelevant against a memory cap. */
-  def estimateDistinctWords(corpus: DataFrame, textCol: String): Long =
-    corpus.select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
-      .agg(approx_count_distinct(col("w")).as("c"))
-      .collect()(0).getLong(0)
-
-  /** Automatic trainer dispatch (the [[graft.ops.KMeans.seedCentroids]]
-    * k-threshold pattern): estimate the vocabulary, run [[fitLocal]]
-    * when the word table fits the driver ([[FitLocalMaxWords]]),
-    * otherwise the distributed [[fit]] rounds. Both paths produce the
-    * identical merge list (spec-pinned), so the dispatch changes cost,
-    * never results. */
-  def fitAuto(corpus: DataFrame, textCol: String, rounds: Int,
-              maxLocalWords: Long = FitLocalMaxWords): Seq[Merge] =
-    if (estimateDistinctWords(corpus, textCol) <= maxLocalWords)
-      fitLocal(corpus, textCol, rounds)
-    else fit(corpus, textCol, rounds)
-
+    * and mixed-corpus fixtures. Resident driver state is ~1.9 KB per
+    * distinct word (measured linear from 1M to 20M words, COVERAGE.md),
+    * so a caller whose vocabulary may exceed ~8M words (~15 GB) calls
+    * [[fit]]'s distributed rounds instead. */
   def fitLocal(corpus: DataFrame, textCol: String, rounds: Int): Seq[Merge] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val wordRows = corpus

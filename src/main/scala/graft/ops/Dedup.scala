@@ -259,18 +259,6 @@ object Dedup {
   private def familyHash(i: Int, x: Column): Column =
     (x * (2L * i + 1) + (12345L * i + 1)) % HashP
 
-  /** MinHash signature (length numHashes) over a shingle array: hash i of a
-    * doc = min over shingles of familyHash(i, md5Hash60(shingle)). Pure HOF
-    * expression — fine for ad-hoc use, but higher-order functions are
-    * INTERPRETED in Spark; the hot path below uses minhashSignatures
-    * (exploded + static columns, whole-stage codegen) instead. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    val xs = transform(shingles, s => md5Hash60(s) % HashP)
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      h => array_min(transform(xs,
-        x => (x * (h * 2 + 1) + (h * 12345 + 1)) % HashP)))
-  }
-
   /** Codegen-fast minhash signatures from a (id, shingles: array<string>)
     * frame: explode, md5-hash each shingle ONCE, evaluate each family
     * member as a STATIC arithmetic column (whole-stage codegen), take
@@ -488,8 +476,8 @@ object Dedup {
     clusterPairsCounted(pairs, maxIter)._1
 
   /** [[clusterPairs]] plus the number of large+small rounds executed —
-    * package-visible so scale probes and specs can assert the O(log n)
-    * round bound directly. */
+    * package-visible so specs can assert the O(log n) round bound
+    * directly. */
   private[graft] def clusterPairsCounted(pairs: DataFrame,
                                          maxIter: Int = 25): (DataFrame, Int) = {
     // canonical undirected edges (v < u), self-pairs split off; the
@@ -843,20 +831,12 @@ object Dedup {
   val HotBucketThreshold = 4096
 
   /** The 48 fingerprint bits OUTSIDE quarter `q`, packed high-to-low in
-    * quarter order — the key material for the level-2 re-block. The
-    * fold form over the quarter ARRAY; kept as the spec reference for
-    * [[rem48Pk]], which the hot path uses (higher-order aggregate runs
-    * interpreted — it was the last interpreted expression in the print
-    * candidate path). */
-  private[graft] def rem48(sh: Column, q: Column): Column =
-    aggregate(filter(sequence(lit(0), lit(3)), j => j =!= q),
-      lit(0L), (acc, j) => shiftleft(acc, 16) + element_at(sh, j + 1))
-
-  /** [[rem48]] as a codegen CASE over the PACKED print: the pack is
-    * bijective over disjoint 16-bit ranges (q0 high), so cutting
-    * quarter q out of pk by shift/mask arithmetic reproduces the fold's
-    * shift-accumulate over the three remaining quarters exactly
-    * (spec-pinned equal on random prints, all q). */
+    * quarter order — the key material for the level-2 re-block — as a
+    * codegen CASE over the PACKED print: the pack is bijective over
+    * disjoint 16-bit ranges (q0 high), so cutting quarter q out of pk by
+    * shift/mask arithmetic equals a shift-accumulate over the three
+    * remaining quarters (spec-pinned equal to that array fold on random
+    * prints, all q). */
   private[graft] def rem48Pk(pk: Column, q: Column): Column =
     when(q === 0, pk.bitwiseAND(lit(0xFFFFFFFFFFFFL)))
       .when(q === 1, shiftleft(shiftrightunsigned(pk, 48), 32) +
@@ -865,20 +845,12 @@ object Dedup {
         pk.bitwiseAND(lit(0xFFFFL)))
       .otherwise(shiftrightunsigned(pk, 16))
 
-  /** The four 12-bit sub-blocks of [[rem48]]: a pair agreeing on
+  /** The four 12-bit sub-blocks of [[rem48Pk]]: a pair agreeing on
     * quarter `q` with <= 3 bit errors has those errors inside the
     * remaining 48 bits, so it agrees on at least one of four 12-bit
     * blocks — the SAME pigeonhole argument as level 1, one level down.
-    * Array-fold form, spec reference for [[subKeysPk]]. */
-  private[graft] def subKeys(sh: Column, q: Column): Column = {
-    val rem = rem48(sh, q)
-    array((0 to 3).map { i =>
-      shiftright(rem, 36 - 12 * i).bitwiseAND(lit(0xfffL))
-    }: _*)
-  }
-
-  /** [[subKeys]] from the packed print — pure shift/mask codegen, no
-    * interpreted fold; what the hot-bucket level-2 joins key on. */
+    * Pure shift/mask codegen over the packed print; what the hot-bucket
+    * level-2 joins key on. */
   private[graft] def subKeysPk(pk: Column, q: Column): Column = {
     val rem = rem48Pk(pk, q)
     array((0 to 3).map { i =>
@@ -943,7 +915,7 @@ object Dedup {
     * O(|bucket|^2) BEFORE the hamming filter -- AQE skew-split can
     * parallelize that work but cannot shrink it. Buckets past
     * `hotThreshold` members therefore re-block on the four 12-bit
-    * sub-blocks of their remaining 48 bits ([[subKeys]]): within such a
+    * sub-blocks of their remaining 48 bits ([[subKeysPk]]): within such a
     * bucket a <=3-error pair still agrees on a sub-block (pigeonhole,
     * level 2), so the escalated result is IDENTICAL to the plain join.
     * An `approxRecall` radius above 3 runs the PLAIN level-1 join
@@ -1076,38 +1048,32 @@ object Dedup {
     * composes with the batch operator, the established
     * dedupAgainstIndex convention.
     *
-    * `checkpointIndex` contract: the index feeds three plan branches
+    * Precondition: `index` is a deterministic or persisted scan — a
+    * column-pruned read of the print store, as every incremental and
+    * streaming caller passes. It feeds three plan branches
     * (identical-print join, rep groupBy, membership fan-out), each of
-    * which evaluates it separately unless it is checkpointed. With the
-    * default `false` the index MUST be a deterministic or persisted scan —
-    * a column-pruned read of the print store, as every incremental and
-    * streaming caller passes. An index derived in-plan from a
-    * nondeterministic or costly source needs `true`: otherwise the three
-    * branches may see different indexes (an inconsistent pair set) and
-    * re-run the derivation three times. */
+    * which evaluates it separately, so a caller whose index is derived
+    * in-plan from a nondeterministic or costly source checkpoints it
+    * first: otherwise the three branches may see different indexes (an
+    * inconsistent pair set) and re-run the derivation three times. */
   def quarterNearDupAgainstIndex(batch: DataFrame, index: DataFrame,
                                  maxHamming: Int = 3,
                                  approxRecall: Boolean = false,
-                                 hotThreshold: Int = HotBucketThreshold,
-                                 checkpointIndex: Boolean = false): DataFrame = {
+                                 hotThreshold: Int = HotBucketThreshold): DataFrame = {
     require(approxRecall || (maxHamming >= 0 && maxHamming <= 3),
       s"4-quarter pigeonhole blocking is complete only for maxHamming in [0,3], got $maxHamming; pass approxRecall=true to accept blocking-limited recall")
     require(hotThreshold >= 2, s"hotThreshold must be >= 2, got $hotThreshold")
     // same materialization discipline as quarterNearDupPairs: the BATCH
     // side's (id, pk) proxy feeds three plan branches (identical-print
     // join, rep groupBy, membership fan-out) — checkpoint once, decode
-    // once. The INDEX side is NOT checkpointed by default: in production
-    // (and in every incremental/streaming caller here) it is a
-    // column-pruned scan of the persisted print store, and materializing
-    // the whole growing history per call is the scale bug the minhash
-    // twin's doc names — its three consuming branches read three pruned
-    // (id, sh) scans instead. A caller whose index is DERIVED IN-PLAN
-    // from payloads (the bench's hotbucket fixture) opts into
-    // checkpointIndex = true so the derivation still runs once.
+    // once. The INDEX side is NOT checkpointed: it is a column-pruned
+    // scan of the persisted print store, and materializing the whole
+    // growing history per call is the scale bug the minhash twin's doc
+    // names — its three consuming branches read three pruned (id, sh)
+    // scans instead.
     val mb = batch.select(col("id"), packPrint(col("sh")).as("pk"))
       .localCheckpoint(false)
-    val miPlan = index.select(col("id"), packPrint(col("sh")).as("pk"))
-    val mi = if (checkpointIndex) miPlan.localCheckpoint(false) else miPlan
+    val mi = index.select(col("id"), packPrint(col("sh")).as("pk"))
     val samePairs = mb.as("a").join(mi.as("b"), col("a.pk") === col("b.pk"))
       .select(col("a.id").as("idA"), col("b.id").as("idB"),
         lit(0).as("hamming"))

@@ -64,227 +64,18 @@ object KMeans {
     *
     * Cost: k passes, each a map-side min-distance expression (chosen
     * seeds inlined as literals) + a TakeOrdered(1) — no shuffle beyond
-    * the top-1 reduction, driver state one vector per pass. For
-    * quantizer k (tens, up to [[LargeKSeedThreshold]]) k scans is the
-    * honest, portable choice; past the threshold this DISPATCHES to the
-    * [[seedLargeK]] k-means||-style sampled seeding (k sequential scans
-    * at SemDeDup's k=50k paper setting would be unusable).
+    * the top-1 reduction, driver state one vector per pass. Every fit in
+    * the repo is a quantizer of k ≤ 16, where k scans is the honest,
+    * portable choice; any larger k takes the same running-min traversal
+    * (k scans, one new distance per row per scan). A k in the thousands
+    * (SemDeDup's paper setting) needs sampled k-means|| seeding instead,
+    * which is not implemented.
     * Duplicate data points degrade gracefully: once every remaining
     * vector coincides with a seed, subsequent picks tie at distance 0
     * and the starved clusters drop out in the first Lloyd update. */
   def seedCentroids(df: DataFrame, idCol: String, vecCol: String,
-                    k: Int): Seq[Centroid] = {
-    val v = vecs(df, idCol, vecCol)
-    if (k > LargeKSeedThreshold) seedLargeK(v, k) else seedFromVecs(v, k)
-  }
-
-  /** Above this k, seeding switches from the k-scan farthest-first
-    * traversal to k-means|| oversampling: the scan-count crossover where
-    * driver-paced sequential passes stop being the cheap option. Every
-    * shipped quantizer fit (k ≤ 16) stays below it, so the small-k path
-    * — and every existing oracle hash — is untouched. */
-  val LargeKSeedThreshold = 32
-
-  /** Deterministic k-means|| seeding (Bahmani, Moseley, Vattani, Kumar,
-    * Vassilvitskii 2012 — "Scalable k-means++") for k past
-    * [[LargeKSeedThreshold]]: instead of k sequential farthest-first
-    * scans, a few OVERSAMPLING rounds each draw ~ℓ = 2k candidates in
-    * parallel with probability ℓ·d²(x)/φ (d² = distance to the nearest
-    * candidate so far, φ = the total cost), then the ~2k·rounds
-    * candidates are weighted by the points they attract and reduced to
-    * k driver-side. The paper's RNG draws are replaced with the engine's
-    * determinism discipline:
-    *   - a point is drawn in round r iff
-    *     `hashPriority("seed:" + r + ":" + id) < ℓ·d²/φ` — the same
-    *     domain-separated uniform-variate trick the sampling operators
-    *     use (independent across rounds, reproducible on any engine);
-    *   - φ accumulates as floor-scaled exact integers (DECIMAL(38,0)),
-    *     so the inclusion threshold is partition-order-independent;
-    *   - the reduction is a deterministic weighted greedy: the
-    *     heaviest candidate first, then argmax of weight × d²-to-chosen
-    *     (the k-means++ criterion with argmax instead of a draw), all
-    *     ties by id.
-    * Scale shape: per round ONE scan of the data joined against the
-    * (broadcast) NEW candidates only, with the running d² carried in a
-    * per-point frame (localCheckpointed per round — the lineage lesson
-    * from the curation funnel); the final weighting pass is one scan
-    * against all candidates. Driver state is BOUNDED at
-    * max(2k, 4096) vectors (`candidateCap`): when the drawn candidate
-    * set exceeds the cap, the attraction weights are computed
-    * DISTRIBUTED (per-vector struct-min argmin — map-side partial, the
-    * same shape as the exact path's) and only the top-cap candidates by
-    * (weight desc, vector asc) reach the driver via a TakeOrdered —
-    * the weight-proportional deterministic pre-reduction the k-means‖
-    * paper's reclustering step allows (dropped candidates are the
-    * lightest, exactly the ones the weighted greedy would pick last).
-    * At SemDeDup's paper k = 50k × 768 dims that is ~100k vectors
-    * (~600 MB) instead of the unreduced ~500k (~3 GB). Below the cap
-    * the original exact path runs unchanged (every existing probe and
-    * hash is frozen). Fewer than k distinct candidates (tiny inputs)
-    * degrade to returning them all — clusters starve out in Lloyd
-    * exactly like duplicate-point farthest-first. */
-  def seedLargeK(vIn: DataFrame, k: Int, rounds: Int = 5,
-                 oversample: Double = 2.0,
-                 candidateCap: Long = -1L): Seq[Centroid] = {
-    require(k >= 1 && rounds >= 1)
-    val v = vIn.localCheckpoint()
-    val firstRow = v
-      .select(col("__id"), transform(col("__v"), x => round(x, 6)).as("__c"))
-      .orderBy(Sampling.hashPriority(col("__id")), col("__id"))
-      .limit(1).collect()
-    require(firstRow.nonEmpty,
-      "KMeans.seedLargeK: no input rows — nothing to seed from")
-    val ell = oversample * k
-    val sq = (a: Column, b: Column) => Similarity.sqDist(a, b)
-    var cands: DataFrame = v.sparkSession.createDataFrame(
-      java.util.List.of(Row(firstRow.head.getSeq[Double](1))),
-      StructType(Seq(StructField("__cv", ArrayType(DoubleType)))))
-    var newCands = cands
-    // running per-point cost: d² to the nearest candidate chosen so far
-    var d2 = v.crossJoin(broadcast(newCands))
-      .groupBy("__id").agg(min(sq(col("__v"), col("__cv"))).as("__d2"))
-      .localCheckpoint()
-    for (r <- 1 to rounds) {
-      val phi = d2.agg(sum(floor(col("__d2") * lit(1e9))
-        .cast("decimal(38,0)")).as("__phi")).collect().head
-      val phiD = if (phi.isNullAt(0)) 0.0
-        else phi.getDecimal(0).doubleValue / 1e9
-      if (phiD > 0.0) {
-        val drawn = v.join(d2, "__id")
-          .filter(Sampling.hashPriority(
-              concat(lit(s"seed:$r:"), col("__id").cast("string"))) <
-            lit(ell) * col("__d2") / lit(phiD))
-          .select(transform(col("__v"), x => round(x, 6)).as("__cv"))
-          .localCheckpoint()
-        // a zero-candidate draw (possible on tiny/degenerate inputs where
-        // every hash variate lands above its inclusion threshold) must NOT
-        // touch d2: a crossJoin against the empty frame would aggregate d2
-        // to EMPTY, phi would read 0 forever, and every later round would
-        // silently stop sampling. Keep the previous d2 and move on — the
-        // next round redraws with fresh domain-separated variates.
-        if (!drawn.isEmpty) {
-          newCands = drawn
-          cands = cands.unionByName(newCands).localCheckpoint()
-          if (r < rounds)
-            d2 = v.join(d2, "__id")
-              .crossJoin(broadcast(newCands))
-              .groupBy(col("__id"), col("__d2"))
-              .agg(min(sq(col("__v"), col("__cv"))).as("__dn"))
-              .select(col("__id"), least(col("__d2"), col("__dn")).as("__d2"))
-              .localCheckpoint()
-        }
-      }
-    }
-    val lexOrd = scala.math.Ordering.Implicits
-      .seqOrdering[Seq, Double](Ordering.Double.TotalOrdering)
-    val cap = if (candidateCap > 0) candidateCap else math.max(2L * k, 4096L)
-    val distinctCands = cands.distinct().localCheckpoint()
-    val nCands = distinctCands.count()
-    // weight candidates by attraction, then reduce driver-side. The
-    // collect's partition order is NOT deterministic — canonicalize by
-    // sorting the distinct candidate vectors lexicographically before
-    // assigning indices, or every downstream tie-break would float.
-    def d2To(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    val reduced: (Array[Array[Double]], Map[Long, Long]) =
-      if (nCands <= cap) {
-        // exact path (bit-frozen): every candidate reaches the driver
-        val arr = distinctCands
-          .collect().map(_.getSeq[Double](0).toArray)
-          .sortBy(_.toSeq)(lexOrd)
-        val candDf = v.sparkSession.createDataFrame(
-          java.util.Arrays.asList(arr.zipWithIndex.map { case (c, i) =>
-            Row(i.toLong, c.toSeq) }: _*),
-          StructType(Seq(StructField("__ci", LongType),
-            StructField("__cv", ArrayType(DoubleType)))))
-        // nearest-candidate argmin as a struct-min aggregate, NOT a
-        // window: the (point x candidate) product is the probe's largest
-        // relation (n x ~2k rounds-worth of candidates) and a per-point
-        // window would sort-shuffle all of it; min(struct(d2, ci))
-        // partial-aggregates map-side down to one row per point before
-        // the exchange. Ties by candidate index, matching the
-        // reduction's id-ascending discipline.
-        val w = v.crossJoin(broadcast(candDf))
-          .select(col("__id"),
-            struct(sq(col("__v"), col("__cv")).as("__dc"), col("__ci"))
-              .as("__s"))
-          .groupBy("__id").agg(min(col("__s")).as("__m"))
-          .groupBy(col("__m.__ci").as("__ci")).agg(count(lit(1)).as("__w"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        (arr, w)
-      } else {
-        // DISTRIBUTED pre-reduction. Candidates first get DENSE indices
-        // in lexicographic vector order — a single-partition window,
-        // bounded by the CANDIDATE count (~2k·rounds), never the data —
-        // because the per-point argmin must aggregate min over
-        // struct(double, long): a struct carrying the vector itself is
-        // not hash-aggregable (array-typed buffer → SortAggregate) and
-        // measurably sort-spills the whole point × candidate relation.
-        // With the long index the argmin partial-aggregates map-side,
-        // ties break on the lex-ascending index (identical semantics to
-        // the exact path); a left join keeps zero-attraction candidates
-        // rankable, and the (weight desc, vector asc) orderBy+limit is
-        // a TakeOrdered — partial top-cap per partition, only cap rows
-        // ever reach the driver. The greedy then runs on those.
-        val candIdx = distinctCands
-          .withColumn("__ci", row_number().over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("__cv")))
-            .cast("long") - 1L)
-          .localCheckpoint()
-        val nearest = v.crossJoin(broadcast(candIdx))
-          .select(col("__id"),
-            struct(sq(col("__v"), col("__cv")).as("__dc"), col("__ci"))
-              .as("__s"))
-          .groupBy("__id").agg(min(col("__s")).as("__m"))
-          .groupBy(col("__m.__ci").as("__ci")).agg(count(lit(1)).as("__w"))
-        val rows = candIdx.join(nearest, Seq("__ci"), "left")
-          .select(col("__cv"), coalesce(col("__w"), lit(0L)).as("__w"))
-          .orderBy(col("__w").desc, col("__cv"))
-          .limit(cap.toInt)
-          .collect()
-          .map(r => (r.getSeq[Double](0).toArray, r.getLong(1)))
-          .sortBy(_._1.toSeq)(lexOrd)
-        (rows.map(_._1),
-          rows.indices.map(i => i.toLong -> rows(i)._2).toMap)
-      }
-    val (cArr, weights) = reduced
-    val byWeight = cArr.indices
-      .map(i => (i, weights.getOrElse(i.toLong, 0L)))
-      .sortBy { case (i, w) => (-w, i) }
-    if (cArr.length <= k)
-      return byWeight.map(_._1).zipWithIndex
-        .map { case (ci, ord) => Centroid(ord, cArr(ci).toSeq, 0L) }
-    val chosen = collection.mutable.ArrayBuffer(byWeight.head._1)
-    val inChosen = Array.fill(cArr.length)(false)
-    inChosen(chosen.head) = true
-    val minD2 = Array.tabulate(cArr.length)(i =>
-      d2To(cArr(i), cArr(chosen.head)))
-    while (chosen.size < k) {
-      var best = -1; var bestScore = -1.0
-      var i = 0
-      while (i < cArr.length) {
-        // strict > keeps the LOWEST index on score ties (ids ascend)
-        if (!inChosen(i)) {
-          val score = weights.getOrElse(i.toLong, 0L).toDouble * minD2(i)
-          if (score > bestScore) { bestScore = score; best = i }
-        }
-        i += 1
-      }
-      chosen += best
-      inChosen(best) = true
-      var j = 0
-      while (j < cArr.length) {
-        val d = d2To(cArr(j), cArr(best))
-        if (d < minD2(j)) minD2(j) = d
-        j += 1
-      }
-    }
-    chosen.toSeq.zipWithIndex
-      .map { case (ci, ord) => Centroid(ord, cArr(ci).toSeq, 0L) }
-  }
+                    k: Int): Seq[Centroid] =
+    seedFromVecs(vecs(df, idCol, vecCol), k)
 
   private def seedFromVecs(vIn: DataFrame, k: Int): Seq[Centroid] = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -442,8 +233,7 @@ object KMeans {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val v = vecs(df, idCol, vecCol).persist()
     try {
-      var cents =
-        if (k > LargeKSeedThreshold) seedLargeK(v, k) else seedFromVecs(v, k)
+      var cents = seedFromVecs(v, k)
       for (_ <- 0 until iters)
         cents = update(v.withColumn("__cluster", assignExpr(col("__v"), cents)))
       cents

@@ -155,18 +155,6 @@ object WordPiece {
     * Every pair's current state is always in the heap, so the first
     * valid pop is the exact argmax. A spec pins merge-for-merge
     * equality (scores and counts included) against [[fit]]. */
-  /** Automatic trainer dispatch — [[Bpe.fitAuto]]'s contract with
-    * WordPiece trainers: the resident state (split symbol arrays, the
-    * pair maps, the lazy max-heap) has the same B/word order as BPE's
-    * (the vocabmem probe's 1.9 KB/word bound governs both), so the
-    * same [[Bpe.FitLocalMaxWords]] cap applies. Identical output on
-    * either path (fitLocal == fit is spec-pinned). */
-  def fitAuto(corpus: DataFrame, textCol: String, rounds: Int,
-              maxLocalWords: Long = Bpe.FitLocalMaxWords): Seq[WpMerge] =
-    if (Bpe.estimateDistinctWords(corpus, textCol) <= maxLocalWords)
-      fitLocal(corpus, textCol, rounds)
-    else fit(corpus, textCol, rounds)
-
   def fitLocal(corpus: DataFrame, textCol: String,
                rounds: Int): Seq[WpMerge] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Chunking, Dedup, Similarity, TextAnalysis}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Self-consistency tests for the approximate operators (the DuckDB oracle
@@ -316,6 +317,21 @@ class DedupSimilaritySpec extends SparkSuite {
     assert(diff.count() == 0L)
   }
 
+  /** Reference form of [[Dedup.rem48Pk]]: the 48 print bits outside
+    * quarter `q`, shift-accumulated over the quarter ARRAY. */
+  private def rem48(sh: Column, q: Column): Column =
+    aggregate(filter(sequence(lit(0), lit(3)), j => j =!= q),
+      lit(0L), (acc, j) => shiftleft(acc, 16) + element_at(sh, j + 1))
+
+  /** Reference form of [[Dedup.subKeysPk]]: the four 12-bit sub-blocks
+    * of [[rem48]]. */
+  private def subKeys(sh: Column, q: Column): Column = {
+    val rem = rem48(sh, q)
+    array((0 to 3).map { i =>
+      shiftright(rem, 36 - 12 * i).bitwiseAND(lit(0xfffL))
+    }: _*)
+  }
+
   test("packed-print shift/mask rem48 and subKeys equal the array folds") {
     // rem48Pk / subKeysPk (the codegen CASE forms the hot-bucket level-2
     // join keys on) must agree with the interpreted array folds for
@@ -331,8 +347,8 @@ class DedupSimilaritySpec extends SparkSuite {
         Dedup.packPrint(col("sh")).as("pk"))
       .crossJoin(spark.range(4).select(col("id").cast("int").as("q")))
     val diff = withQ.filter(
-      Dedup.rem48(col("sh"), col("q")) =!= Dedup.rem48Pk(col("pk"), col("q")) ||
-        Dedup.subKeys(col("sh"), col("q")) =!=
+      rem48(col("sh"), col("q")) =!= Dedup.rem48Pk(col("pk"), col("q")) ||
+        subKeys(col("sh"), col("q")) =!=
           Dedup.subKeysPk(col("pk"), col("q")))
     assert(diff.count() == 0L)
     // and unpackPrint stays the exact inverse of packPrint on the same set
@@ -381,7 +397,7 @@ class DedupSimilaritySpec extends SparkSuite {
       // buckets of C(m, 2) — md5-diverse prints spread over 4 x 4096
       // sub-keys, so ~n/2 pairs survive, 3 orders of magnitude less.
       val hotCandidates = f
-        .select(col("id"), posexplode(Dedup.subKeys(col("sh"), lit(0))))
+        .select(col("id"), posexplode(subKeys(col("sh"), lit(0))))
         .groupBy("pos", "col").agg(count(lit(1)).as("m"))
         .agg(sum((col("m") * (col("m") - 1) / 2).cast("long")))
         .as[Long].collect().head
@@ -997,8 +1013,8 @@ class DedupSimilaritySpec extends SparkSuite {
     import graft.ops.KMeans
     val rows = (0 until 120).map(i => i.toLong ->
       Array.tabulate(4)(d => math.sin(i * 7.0 + d * 3.0))).toDF("id", "vec")
-    val k = 20 // the running-min regime: (RunningMinSeedThreshold, LargeKSeedThreshold]
-    assert(k > KMeans.RunningMinSeedThreshold && k <= KMeans.LargeKSeedThreshold)
+    val k = 20 // the running-min regime: k > RunningMinSeedThreshold
+    assert(k > KMeans.RunningMinSeedThreshold)
     val before = spark.sparkContext.getPersistentRDDs.size
     assert(KMeans.seedCentroids(rows, "id", "vec", k).size == k)
     assert(spark.sparkContext.getPersistentRDDs.size <= before)

@@ -565,17 +565,6 @@ class OpsSpec extends SparkSuite {
     }
   }
 
-  test("bpe: fitAuto dispatches on the word-table estimate, same output") {
-    import graft.ops.Bpe
-    import spark.implicits._
-    val df = Seq((1L, "low lower newest widest low newest")).toDF("id", "text")
-    val est = Bpe.estimateDistinctWords(df, "text")
-    assert(est >= 3 && est <= 5, s"estimate off: $est for 4 distinct words")
-    val auto = Bpe.fitAuto(df, "text", 4)
-    assert(auto == Bpe.fitLocal(df, "text", 4))
-    // zero cap -> the distributed rounds through the dispatch: same list
-    assert(Bpe.fitAuto(df, "text", 4, maxLocalWords = 0L) == auto)
-  }
   import spark.implicits._
 
   // ------------------------------------------------------------ F1 monthly

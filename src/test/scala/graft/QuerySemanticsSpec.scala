@@ -312,14 +312,13 @@ class QuerySemanticsSpec extends SparkSuite {
       s"mean recall_refined@10 = $recall fell below the 0.90 floor")
   }
 
-  test("large-k fit routes through k-means|| seeding and separates 40 planted blobs") {
+  test("large-k fit seeds through the running-min path and separates 40 planted blobs") {
     import graft.ops.KMeans
     // 40 one-hot-separated clusters (10 members each) in 40 dims — k=40
-    // is past LargeKSeedThreshold, so fit seeds via the deterministic
-    // k-means|| oversampling path; 40 sequential farthest-first scans is
-    // exactly what that path exists to avoid. After 2 Lloyd rounds every
-    // blob must be PURE (one cluster per blob) and blobs must not merge.
-    assert(40 > KMeans.LargeKSeedThreshold)
+    // is past RunningMinSeedThreshold, so fit seeds by the checkpointed
+    // running-min farthest-first traversal (40 scans). After 2 Lloyd
+    // rounds every blob must be PURE (one cluster per blob) and blobs
+    // must not merge.
     val emb = (0L until 400L).map { i =>
       val c = (i % 40).toInt
       (i, Array.tabulate(40) { d =>
@@ -343,61 +342,6 @@ class QuerySemanticsSpec extends SparkSuite {
       s"blobs merged: only ${clustersUsed.size} distinct clusters for 40 blobs")
     // determinism: a refit lands on bit-identical centroids
     val cents2 = KMeans.fit(emb, "vec_id", "embedding", k = 40, iters = 2)
-    assert(cents == cents2, "k-means|| fit is not deterministic across runs")
-  }
-
-  test("k-means|| pre-reduction: cap-bounded candidate collect keeps seed quality") {
-    import graft.ops.KMeans
-    // same 40-blob fixture; candidateCap forced far below the drawn
-    // candidate count so the DISTRIBUTED weight + TakeOrdered path runs
-    // (the driver-heap bound for SemDeDup-scale k). Seeds must still be
-    // k, deterministic, actual corpus points, and cover every blob —
-    // the pre-reduction drops only the lightest candidates, which the
-    // weighted greedy would have picked last anyway.
-    val emb = (0L until 400L).map { i =>
-      val c = (i % 40).toInt
-      (i, Array.tabulate(40) { d =>
-        val base = if (d == c) 5.0f else 0.0f
-        base + 0.05f * ((i * 13 + d * 5) % 7 - 3)
-      })
-    }.toDF("vec_id", "embedding")
-    val v = emb.select(col("vec_id").as("__id"),
-      Similarity.asDouble(col("embedding")).as("__v"))
-    def coverage(cents: Seq[KMeans.Centroid]): Int = emb
-      .select((col("vec_id") % 40).as("blob"),
-        KMeans.assignExpr(Similarity.asDouble(col("embedding")), cents)
-          .as("cluster"))
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-      .groupBy(_._1).map { case (_, rs) => rs.map(_._2).groupBy(identity)
-        .maxBy { case (cl, os) => (os.size, -cl) }._1 }.toSeq.distinct.size
-    // the EXACT (uncapped) seeding is the quality baseline — Lloyd fixes
-    // its residual imperfections (the fit test above proves 40/40 after
-    // 2 iterations); seeding alone may cover slightly fewer
-    val exact = KMeans.seedLargeK(v, k = 40, candidateCap = 1000000L)
-    val exactCover = coverage(exact)
-    // cap 100 (2.5 candidates/blob after reduction): same seed count,
-    // deterministic, corpus-point seeds, and NO coverage loss beyond
-    // one blob vs the exact reduction — the dropped candidates are the
-    // lightest, which the greedy would have picked last
-    val seeds = KMeans.seedLargeK(v, k = 40, candidateCap = 100L)
-    assert(seeds.size == 40, s"expected 40 seeds, got ${seeds.size}")
-    assert(seeds == KMeans.seedLargeK(v, k = 40, candidateCap = 100L),
-      "pre-reduced seeding is not deterministic")
-    val points = emb.collect().map(_.getSeq[Float](1)
-      .map(x => math.rint(x.toDouble * 1e6) / 1e6).toSeq).toSet
-    assert(seeds.forall(s => points.contains(s.comps)),
-      "a pre-reduced seed is not a corpus point")
-    val capCover = coverage(seeds)
-    assert(capCover >= exactCover - 1 && capCover >= 38,
-      s"pre-reduction degraded coverage: $capCover vs exact $exactCover")
-    // an aggressive cap (1.5/blob) must still be deterministic, k-sized,
-    // and near-complete — and must actually ALTER the candidate pool
-    // (proof the capped branch executed)
-    val tight = KMeans.seedLargeK(v, k = 40, candidateCap = 60L)
-    assert(tight.size == 40 &&
-      tight == KMeans.seedLargeK(v, k = 40, candidateCap = 60L))
-    assert(tight != exact, "cap 60 should alter the candidate pool")
-    assert(coverage(tight) >= 38,
-      s"tight cap collapsed coverage: ${coverage(tight)} of 40")
+    assert(cents == cents2, "large-k fit is not deterministic across runs")
   }
 }

@@ -25,4 +25,15 @@ class StructureSpec extends AnyFunSuite {
     } yield s"$file:${n + 1}: $word"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
+
+  test("every declared query has exactly one DuckDB oracle") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries == oracles,
+      s"queries without an oracle: ${(queries -- oracles).toSeq.sorted}; " +
+        s"oracles without a query: ${(oracles -- queries).toSeq.sorted}")
+    // the declared set: a change that adds or retires a query updates
+    // this count on purpose
+    assert(queries.size == 152)
+  }
 }

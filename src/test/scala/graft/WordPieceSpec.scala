@@ -69,15 +69,6 @@ class WordPieceSpec extends SparkSuite {
     }
   }
 
-  test("wordpiece: fitAuto dispatches on the word-table estimate, same output") {
-    val df = Seq(corpus).toDF("text")
-    val auto = WordPiece.fitAuto(df, "text", 4)
-    assert(auto == WordPiece.fitLocal(df, "text", 4))
-    // a zero cap forces the distributed rounds through the dispatch —
-    // identical merges (the fitLocal == fit pin, exercised end-to-end)
-    assert(WordPiece.fitAuto(df, "text", 4, maxLocalWords = 0L) == auto)
-  }
-
   test("wordpiece: merge table persists and reloads bit-identically") {
     val ms = WordPiece.fit(Seq(corpus).toDF("text"), "text", rounds = 2)
     val dir = java.nio.file.Files
